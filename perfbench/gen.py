@@ -133,8 +133,8 @@ def _text(rng, lang: str, n_words: int) -> str:
 def sf_tables(out_dir: str, seed: int, scale: float) -> dict[str, int]:
     """Write the ten lane tables as single parquet files; returns row counts.
 
-    ``scale`` = 0.01 gives the sizes of the driver's sf0.01 set (60k
-    lineitem rows, 10k events, 500 documents and embeddings)."""
+    ``scale`` = 0.01 gives TPC-H sf0.01 sizes (60k lineitem rows) with
+    10k events and 500 documents and embeddings."""
     rng = np.random.default_rng([seed, 7])
     os.makedirs(out_dir, exist_ok=True)
     n_cust, n_ord, n_li = int(150_000 * scale), int(1_500_000 * scale), int(6_000_000 * scale)

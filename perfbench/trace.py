@@ -256,7 +256,7 @@ def collect(tracer: Tracer) -> tuple[dict[str, StageStats], int, int]:
 
     Returns ``(stats by group, unattributed jobs, total jobs)``.  A job
     with no group was launched from a thread the benchmark did not label
-    (lane-internal driver threads); it counts as unattributed, as does a
+    (lane-internal threads); it counts as unattributed, as does a
     job of the timed phase that ran outside every span."""
     spark = tracer.spark
     jsc = spark.sparkContext._jsc.sc()
