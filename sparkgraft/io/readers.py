@@ -96,7 +96,7 @@ def _evict_stopped_sessions() -> None:
         if getattr(df.sparkSession._sc, "_jsc", None) is None
     ]
     for k in dead:
-        del _PLAN_CACHE[k]
+        _PLAN_CACHE.pop(k, None)  # a concurrent evictor may have taken it
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

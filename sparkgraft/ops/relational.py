@@ -82,14 +82,12 @@ def fan_out(df: DataFrame) -> DataFrame:
     target = sc.defaultParallelism
     approx = _approx_input_bytes(df)
     if approx is not None:
-        try:
-            mpb = int(
-                df.sparkSession.conf.get(
-                    "spark.sql.files.maxPartitionBytes", "134217728"
-                ).lower().rstrip("b")
-            )
-        except ValueError:
-            mpb = 134217728
+        # the JVM's own byte-string parser: '1g', '64mb', '134217728' alike
+        mpb = (
+            df.sparkSession._jsparkSession.sessionState()
+            .conf()
+            .filesMaxPartitionBytes()
+        )
         if approx >= target * mpb:
             return df
         return df.repartition(target)

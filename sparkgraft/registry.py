@@ -95,6 +95,35 @@ def _stream_state_partitions(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def run_stream_once(
+    stream: DataFrame, work: str, sink=None, output_mode: str = "append"
+) -> None:
+    """Drain ``stream`` once (availableNow) under pinned state partitions.
+
+    The checkpoint lives at ``{work}/ckpt``; each micro-batch goes to
+    ``sink(batch_df, batch_id)``, by default an append of parquet to
+    ``{work}/out``.  An error raised in the sink propagates (the query is
+    then already terminated); a run still going after 300 s is stopped
+    and raises ``TimeoutError``."""
+    if sink is None:
+        out = f"{work}/out"
+
+        def sink(df, _id):
+            df.write.mode("append").parquet(out)
+
+    with _stream_state_partitions(stream.sparkSession):
+        q = (
+            stream.writeStream.foreachBatch(sink)
+            .outputMode(output_mode)
+            .option("checkpointLocation", f"{work}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(300):
+            q.stop()
+            raise TimeoutError(f"stream with checkpoint {work}/ckpt ran past 300s")
+
+
 # ---------------------------------------------------------------------------
 # Reference-parity: WAU queries (SURVEY §2.4 A1/A2, §2.8 F5, §2.6 O1)
 # ---------------------------------------------------------------------------
@@ -1287,65 +1316,16 @@ def q_streaming_stateful_sessionize(spark, sf_dir):
 
     from sparkgraft.streaming.sessions import stateful_sessionize
 
-    import os
-
     work = scratch_dir("sparkgraft_stream_")
-    ckpt, out, src = f"{work}/ckpt", f"{work}/out", f"{work}/src"
-    # the streaming file source wants a directory of FILES — link the
-    # single driver file in, or each part file when the table is itself a
-    # Spark-written directory (the perf-rig caches): the file source does
-    # not recurse into a linked subdirectory, it would silently see zero
-    # input and never produce the sink path
-    os.makedirs(src)
-    # absolute target: a symlink holding a RELATIVE target string resolves
-    # against the symlink's own directory, so a relative sf_dir would
-    # produce broken links the file source silently lists as zero input
-    ev_path = os.path.abspath(f"{sf_dir}/events.parquet")
-    if os.path.isdir(ev_path):
-        # walk, not listdir: a partitioned/nested directory table keeps its
-        # part files below key=value subdirs, and linking zero files would
-        # silently reproduce the zero-input hang this branch exists to fix
-        linked = 0
-        for dirpath, _dirs, files in sorted(os.walk(ev_path)):
-            for part in sorted(files):
-                if part.endswith(".parquet") and not part.startswith(("_", ".")):
-                    os.symlink(
-                        os.path.join(dirpath, part), f"{src}/part-{linked}.parquet"
-                    )
-                    linked += 1
-        if linked == 0:
-            raise FileNotFoundError(
-                f"no part files found under directory table {ev_path!r} — "
-                "the streaming file source would see zero input and hang"
-            )
-    else:
-        os.symlink(ev_path, f"{src}/events.parquet")
-    # stream sees the raw footer schema; like the batch reader, adapt to the
-    # footer's ts encoding (INT64 nanos read as long under nanosAsLong, or
-    # plain micros read as timestamp_ntz) instead of assuming either.
-    from sparkgraft.io.readers import _nanos_fields
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = spark.readStream.schema(raw_schema).parquet(src)
-    if "ts" in _nanos_fields(f"{sf_dir}/events.parquet"):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    with _stream_state_partitions(spark):
-        q = (
-            stateful_sessionize(stream)
-            .writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(out)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        finished = q.awaitTermination(300)
-        if not finished:
-            q.stop()
-            raise TimeoutError("stateful sessionize stream did not finish in 300s")
+    out, src = f"{work}/out", f"{work}/src"
+    # normalize ONCE via the footer-adaptive batch reader (ts ->
+    # TIMESTAMP_NTZ whatever the parquet encoding) and stream the copy —
+    # the stream side then has no encoding cases and no layout cases
+    ev = _t(spark, sf_dir, "events")
+    ev.write.parquet(src)
+    run_stream_once(
+        stateful_sessionize(spark.readStream.schema(ev.schema).parquet(src)), work
+    )
     return spark.read.parquet(out).select(
         "user_id", F.col("ts").cast("timestamp_ntz").alias("ts"), "session_id"
     )
@@ -1519,7 +1499,7 @@ def q_streaming_restart_sessionize(spark, sf_dir):
     from sparkgraft.streaming.sessions import stateful_sessionize
 
     work = scratch_dir("sparkgraft_restart_")
-    ckpt, out, src = f"{work}/ckpt", f"{work}/out", f"{work}/src"
+    out, src = f"{work}/out", f"{work}/src"
     # normalize ONCE via the footer-adaptive batch reader (ts ->
     # TIMESTAMP_NTZ whatever the parquet encoding), write the two split
     # batches already normalized, and stream those — the stream side then
@@ -1538,22 +1518,7 @@ def q_streaming_restart_sessionize(spark, sf_dir):
 
     def _run():
         stream = spark.readStream.schema(raw_schema).parquet(src + "/*")
-        with _stream_state_partitions(spark):
-            q = (
-                stateful_sessionize(stream)
-                .writeStream.foreachBatch(
-                    lambda df, _id: df.write.mode("append").parquet(out)
-                )
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError(
-                    "restart sessionize stream did not finish in 300s"
-                )
+        run_stream_once(stateful_sessionize(stream), work)
 
     mid_lit = F.lit(mid.isoformat(sep=" ")).cast("timestamp_ntz")
     raw.where(F.col("ts") <= mid_lit).write.parquet(f"{src}/b1")
@@ -2178,19 +2143,7 @@ def q_streaming_stream_join(spark, sf_dir):
         & (F.col("purchase_ts") >= F.col("view_ts"))
         & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 300 SECOND")),
     )
-    with _stream_state_partitions(spark):
-        q = (
-            joined.writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(out)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("stream-stream join did not finish in 300s")
+    run_stream_once(joined, work)
     return (
         spark.read.parquet(out)
         .select(
@@ -2235,19 +2188,7 @@ def q_streaming_static_enrich(spark, sf_dir):
     enriched = stream.join(static, stream.user_id == static.c_custkey).select(
         "event_id", "user_id", F.col("c_mktsegment").alias("segment")
     )
-    with _stream_state_partitions(spark):
-        q = (
-            enriched.writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(out)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("stream-static enrich did not finish in 300s")
+    run_stream_once(enriched, work)
     return (
         spark.read.parquet(out)
         .groupBy("segment")
@@ -2289,20 +2230,7 @@ def q_streaming_replay_dedup(spark, sf_dir):
     stream = spark.readStream.schema(
         "event_id bigint, user_id bigint, event_type string"
     ).parquet(src + "/*")
-    with _stream_state_partitions(spark):
-        q = (
-            dedup_exact_stream(stream, ["event_id"])
-            .writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(out)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("replay dedup stream did not finish in 300s")
+    run_stream_once(dedup_exact_stream(stream, ["event_id"]), work)
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -2386,19 +2314,7 @@ def q_streaming_windowed_counts(spark, sf_dir):
             F.col("w.start").alias("window_start"), "n_events", "n_purchases"
         )
     )
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(out)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("windowed-count stream did not finish in 300s")
+    run_stream_once(agg, work)
     return (
         spark.read.parquet(out)
         .where(F.col("window_start") < F.lit("2024-01-06").cast("timestamp_ntz"))
@@ -4128,19 +4044,7 @@ def q_streaming_session_window(spark, sf_dir):
             "n_events",
         )
     )
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.foreachBatch(
-                lambda df, _id: df.write.mode("append").parquet(out)
-            )
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("session-window stream did not finish in 300s")
+    run_stream_once(agg, work)
     return (
         spark.read.parquet(out)
         .where(F.col("user_id") >= 0)
@@ -4204,25 +4108,18 @@ def q_streaming_state_inspect(spark, sf_dir):
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    with _stream_state_partitions(spark):
-        q = (
-            # UPDATE mode (not append): with a never-advancing watermark an
-            # append batch emits zero rows, and an empty sink plan can
-            # short-circuit to zero tasks — leaving the stateStoreSave
-            # operators uncommitted and failing Spark 4's per-batch commit
-            # validation. Update mode emits every changed key, so the noop
-            # write always executes the full plan and every store commits.
-            agg.writeStream.foreachBatch(
-                lambda df, _id: df.write.format("noop").mode("overwrite").save()
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("state-inspect stream did not finish in 300s")
+    # UPDATE mode (not append): with a never-advancing watermark an append
+    # batch emits zero rows, and an empty sink plan can short-circuit to
+    # zero tasks — leaving the stateStoreSave operators uncommitted and
+    # failing Spark 4's per-batch commit validation. Update mode emits
+    # every changed key, so the noop write always executes the full plan
+    # and every store commits.
+    run_stream_once(
+        agg,
+        work,
+        lambda df, _id: df.write.format("noop").mode("overwrite").save(),
+        output_mode="update",
+    )
     state = spark.read.format("statestore").option("path", ckpt).load()
     return state.select(
         F.col("key.window.start").alias("window_start"),
@@ -5246,16 +5143,7 @@ def q_streaming_bitmap_distinct(spark, sf_dir):
             .parquet(f"{state}/batch={batch_id}")
         )
 
-    with _stream_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("bitmap-distinct stream did not finish in 300s")
+    run_stream_once(stream, work, fold_batch)
     merged = (
         spark.read.parquet(state + "/batch=*")
         .groupBy("event_type", "bucket")

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from sparkgraft.ext import bpe, dedup, multimodal, simsearch, sketch, text
 from sparkgraft.io.readers import read_table
-from sparkgraft.registry import register, scratch_dir
+from sparkgraft.registry import register, run_stream_once, scratch_dir
 
 # ---------------------------------------------------------------------------
 # DuckDB dialect fragments (mirrors of the Spark expressions in ext/)
@@ -3337,8 +3337,6 @@ def q_streaming_count_min(spark, sf_dir):
     unbounded stream in bounded state'.  (Registered post-r10-freeze:
     first driver proof lands with the r11 rotation.)"""
 
-    from sparkgraft.registry import _stream_state_partitions
-
     work = scratch_dir("sparkgraft_scm_")
     src, state = f"{work}/src", f"{work}/state"
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
@@ -3370,16 +3368,7 @@ def q_streaming_count_min(spark, sf_dir):
             .parquet(f"{state}/batch={batch_id}")
         )
 
-    with _stream_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("count-min stream did not finish in 300s")
+    run_stream_once(stream, work, fold_batch)
 
     grid = [[0] * sketch.CM_WIDTH for _ in range(sketch.CM_DEPTH)]
     merged = (
@@ -3424,8 +3413,6 @@ def q_streaming_hll_distinct(spark, sf_dir):
     unbounded stream in bounded state.  (Registered post-r11-freeze:
     first driver proof lands with the r11 rotation.)"""
 
-    from sparkgraft.registry import _stream_state_partitions
-
     work = scratch_dir("sparkgraft_shll_")
     src, state = f"{work}/src", f"{work}/state"
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
@@ -3457,16 +3444,7 @@ def q_streaming_hll_distinct(spark, sf_dir):
             .parquet(f"{state}/batch={batch_id}")
         )
 
-    with _stream_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("hll stream did not finish in 300s")
+    run_stream_once(stream, work, fold_batch)
 
     merged = (
         spark.read.parquet(state)

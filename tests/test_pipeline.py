@@ -89,6 +89,24 @@ def test_full_backfill_semantics(spark, raw_dir, clean_table):
     assert _table(spark) == before, "full reload must be a no-op"
 
 
+def test_single_run_load_looks_up_target_twice(spark, raw_dir, clean_table, monkeypatch):
+    """A one-run load reads the target once for both the carry-over
+    frontier and the edge rows; load_overwrite's own ensure_table (its
+    staging sweep) is the only other metastore listing."""
+    from sparkgraft import catalog
+
+    calls = []
+    ensure = catalog.ensure_table
+
+    def counting_ensure(spark_, spec):
+        calls.append(spec.name)
+        ensure(spark_, spec)
+
+    monkeypatch.setattr(catalog, "ensure_table", counting_ensure)
+    ua.load_months(spark, raw_dir, ["2019-10"])
+    assert len(calls) == 2, calls
+
+
 def test_wau_queries_over_table(spark, raw_dir, clean_table):
     ua.load_months(spark, raw_dir, ["2019-10", "2019-11"])
     users = {str(r.event_week): r.wau for r in ua.user_wau(spark).collect()}

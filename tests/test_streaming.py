@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkgraft.ops.sessionize import sessionize
+from sparkgraft.registry import run_stream_once
 from sparkgraft.streaming.sessions import session_counts_stream, stateful_sessionize
 
 SCHEMA = "event_id long, user_id long, ts timestamp"
@@ -40,24 +41,14 @@ def _write_batch(spark, rows, path, n):
     df.coalesce(1).write.mode("overwrite").parquet(f"{path}/b{n}")
 
 
-def _run_stream(spark, src_dir, ckpt, transform, out_dir):
+def _run_stream(spark, src_dir, work, transform):
     stream = (
         spark.readStream.schema(SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir + "/*")
     )
-    q = (
-        transform(stream)
-        .writeStream.foreachBatch(
-            lambda df, _id: df.write.mode("append").parquet(out_dir)
-        )
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.read.parquet(out_dir)
+    run_stream_once(transform(stream), work)
+    return spark.read.parquet(f"{work}/out")
 
 
 @pytest.fixture()
@@ -69,7 +60,7 @@ def batch_df(spark):
 
 
 def test_stateful_sessionize_matches_batch_across_restart(spark, tmp_path, batch_df):
-    src, ckpt, out = str(tmp_path / "src"), str(tmp_path / "ckpt"), str(tmp_path / "out")
+    src, work = str(tmp_path / "src"), str(tmp_path / "run")
     expected = {
         (r.user_id, str(r.ts), r.session_id)
         for r in sessionize(batch_df, order_tiebreak=("event_id",))
@@ -79,10 +70,10 @@ def test_stateful_sessionize_matches_batch_across_restart(spark, tmp_path, batch
 
     # run 1: first micro-batch only
     _write_batch(spark, BATCH1, src, 1)
-    _run_stream(spark, src, ckpt, stateful_sessionize, out)
+    _run_stream(spark, src, work, stateful_sessionize)
     # run 2 (NEW query, same checkpoint): state must survive the restart
     _write_batch(spark, BATCH2, src, 2)
-    got_df = _run_stream(spark, src, ckpt, stateful_sessionize, out)
+    got_df = _run_stream(spark, src, work, stateful_sessionize)
 
     got = {(r.user_id, str(r.ts), r.session_id) for r in got_df.collect()}
     assert got == expected, (
@@ -96,7 +87,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     watermark) must be dropped; distinct events must all survive."""
     from sparkgraft.streaming.dedup import dedup_within_watermark
 
-    src, ckpt, out = str(tmp_path / "dsrc"), str(tmp_path / "dckpt"), str(tmp_path / "dout")
+    src, work = str(tmp_path / "dsrc"), str(tmp_path / "drun")
     batch_a = [
         (10, 1, "2024-03-01 12:00:00"),
         (11, 1, "2024-03-01 12:01:00"),
@@ -109,18 +100,18 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     _write_batch(spark, batch_a, src, 1)
     _write_batch(spark, batch_b, src, 2)
     res = _run_stream(
-        spark, src, ckpt, lambda df: dedup_within_watermark(df, ["event_id"]), out
+        spark, src, work, lambda df: dedup_within_watermark(df, ["event_id"])
     )
     ids = sorted(r.event_id for r in res.collect())
     assert ids == [10, 11, 12], ids
 
 
 def test_session_window_stream_counts(spark, tmp_path, batch_df):
-    src, ckpt, out = str(tmp_path / "src2"), str(tmp_path / "ckpt2"), str(tmp_path / "out2")
+    src, work = str(tmp_path / "src2"), str(tmp_path / "run2")
     _write_batch(spark, BATCH1, src, 1)
     _write_batch(spark, BATCH2, src, 2)
     _write_batch(spark, SENTINEL, src, 3)
-    res = _run_stream(spark, src, ckpt, session_counts_stream, out)
+    res = _run_stream(spark, src, work, session_counts_stream)
     sessions = {
         (r.user_id, str(r.session_start)): r.n_events
         for r in res.collect()
@@ -142,7 +133,7 @@ def test_evicting_sessionize_matches_batch(spark, tmp_path, batch_df):
     sessionize even when idle users' state is dropped between batches.
     BATCH2's user-1 event arrives ~12h after the watermark passed user 1's
     last event + gap, so its state is guaranteed evicted by then."""
-    src, ckpt, out = str(tmp_path / "esrc"), str(tmp_path / "eckpt"), str(tmp_path / "eout")
+    src, work = str(tmp_path / "esrc"), str(tmp_path / "erun")
     expected = {
         (r.user_id, str(r.ts), r.session_id)
         for r in sessionize(batch_df, order_tiebreak=("event_id",))
@@ -152,7 +143,7 @@ def test_evicting_sessionize_matches_batch(spark, tmp_path, batch_df):
     _write_batch(spark, BATCH1, src, 1)
     _write_batch(spark, BATCH2, src, 2)
     got_df = _run_stream(
-        spark, src, ckpt, lambda df: stateful_sessionize(df, evict_watermark="1 minute"), out
+        spark, src, work, lambda df: stateful_sessionize(df, evict_watermark="1 minute")
     )
     got = {(r.user_id, str(r.ts), r.session_id) for r in got_df.collect()}
     assert got == expected, f"diff={got ^ expected}"
@@ -199,19 +190,10 @@ def test_tws_sessionize_matches_batch(spark, sf_dir, tmp_path):
     stream = spark.readStream.schema(raw_schema).parquet(src)
     if "ts" in _nanos_fields(f"{sf_dir}/events.parquet"):
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    out = str(tmp_path / "out")
-    q = (
-        tws_sessionize(stream)
-        .writeStream.foreachBatch(lambda df, _id: df.write.mode("append").parquet(out))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
+    run_stream_once(tws_sessionize(stream), str(tmp_path))
     got = {
         (r.user_id, r.ts): r.session_id
-        for r in spark.read.parquet(out).collect()
+        for r in spark.read.parquet(str(tmp_path / "out")).collect()
     }
     from sparkgraft.io.readers import read_table
 
@@ -264,13 +246,7 @@ def test_streaming_bitmap_partials_merge_across_batches(spark, tmp_path):
             .parquet(f"{state}/batch={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
+    run_stream_once(stream, str(tmp_path), fold)
     batch_dirs = sorted(glob.glob(f"{state}/batch=*"))
     assert len(batch_dirs) >= 2, batch_dirs
     per_batch_slots = [
@@ -290,3 +266,26 @@ def test_streaming_bitmap_partials_merge_across_batches(spark, tmp_path):
         .collect()[0]["n"]
     )
     assert merged == len(users)
+
+
+def test_run_stream_once_propagates_sink_error(spark, tmp_path):
+    """A failing foreachBatch must surface from run_stream_once, leave no
+    query running and restore the caller's shuffle-partition setting."""
+    from pyspark.errors import StreamingQueryException
+
+    src = str(tmp_path / "src")
+    _write_batch(spark, BATCH1, src, 1)
+    stream = spark.readStream.schema(SCHEMA).parquet(src + "/*")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")  # differs from the pin
+
+    def boom(df, batch_id):
+        raise ValueError(f"sink failed on batch {batch_id}")
+
+    try:
+        with pytest.raises(StreamingQueryException, match="sink failed on batch 0"):
+            run_stream_once(stream, str(tmp_path / "run"), boom)
+        assert not spark.streams.active
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

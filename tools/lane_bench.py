@@ -23,7 +23,10 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("lanes", nargs="*")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument(
+        "--cpus",
+        default=os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))),
+    )
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--explain-dir", default=None)
     ap.add_argument("--suffix", default="", help="filename suffix for explain dumps, e.g. _before")

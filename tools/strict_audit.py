@@ -296,7 +296,11 @@ def main() -> int:
         help="'window' (DRIVER_WINDOW), 'all' (every oracle-backed query), "
         "or a comma-separated name list",
     )
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 8)))
+    ap.add_argument(
+        "--cpus",
+        type=int,
+        default=int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))),
+    )
     ap.add_argument("--driver-mem", default=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     ap.add_argument("--out", default="", help="optional JSON artifact path")
     ap.add_argument(
