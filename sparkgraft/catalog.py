@@ -9,12 +9,12 @@ Parity with the reference's Hive connector (SURVEY §2.1 S3-S7):
                      (HiveConnector.scala:17-27)
 - ``extract_sql``    templated ``{TABLE}`` SQL over the registered table
                      (HiveConnector.scala:29-32)
-- ``load_overwrite`` staging table + dynamic-partition INSERT OVERWRITE +
-                     staging drop (HiveConnector.scala:34-57). The staging
-                     hop exists because Spark cannot overwrite a table from
-                     a plan that reads the same table; dynamic overwrite
-                     replaces ONLY the partitions present in the input —
-                     the idempotent-backfill mechanism (reference README:5-8).
+- ``load_overwrite`` dynamic-partition INSERT OVERWRITE straight from the
+                     input (HiveConnector.scala:34-57 minus its staging
+                     table: Spark stages the output and swaps partitions at
+                     commit). It replaces ONLY the partitions present in
+                     the input — the idempotent-backfill mechanism
+                     (reference README:5-8).
 
 Works against either catalog implementation: the in-memory session catalog
 or a Hive metastore (``get_spark(hive=True)``; embedded Derby locally, an
@@ -192,7 +192,7 @@ def sweep_stale_staging(
     spark: SparkSession, table_name: str, horizon_s: float = 3600.0
 ) -> list[str]:
     """Drop orphaned ``temp_<table>_<ns>`` staging tables older than
-    ``horizon_s`` — the recovery for a driver killed between
+    ``horizon_s`` — the recovery for a driver killed between an earlier
     ``load_overwrite``'s staging write and its ``finally`` drop (the
     reference has the same hole: HiveConnector.scala:37-56 drops staging
     only on the happy path).
@@ -242,9 +242,9 @@ def _list_table_names(spark: SparkSession) -> list[str]:
 
 def ensure_table(spark: SparkSession, spec: TableSpec) -> None:
     """Create the partitioned parquet table if it does not exist; on the
-    way, collect staging debris a crashed load left behind (the startup
-    sweep — every pipeline passes through here before reading or
-    loading, so orphans never outlive one horizon + one run)."""
+    way, collect staging debris a crashed load of an earlier version left
+    behind (the startup sweep — every pipeline passes through here before
+    reading or loading, so orphans never outlive one horizon + one run)."""
     # one metastore listing serves both the sweep and the existence check
     # (tableExists was a second ~100 ms Derby round-trip per call; this
     # function runs several times per load).  Qualified names fall back to
@@ -1269,38 +1269,24 @@ def sweep_stale_temporary(root: str, age_s: float = 3600.0) -> list[str]:
 def load_overwrite(spark: SparkSession, spec: TableSpec, df: DataFrame) -> None:
     """Idempotently (over)write the partitions present in ``df``.
 
-    Stages the input to a temp table first (breaking any read-from-target
-    cycle in ``df``'s plan), then INSERT OVERWRITE with dynamic partition
-    overwrite so untouched partitions survive. Rerunning the same load
-    yields byte-identical table contents.
+    One dynamic-partition-overwrite insert, so untouched partitions
+    survive whatever mode the session holds. ``df`` may read the
+    partitioned target: Spark swaps partitions only at commit. A frame
+    reading an UNPARTITIONED target gets Spark's own read-while-overwrite
+    error (no caller does that). Rerunning the same load yields
+    byte-identical table contents.
     """
     ensure_table(spark, spec)
-    # dots in a qualified table name would misparse the staging name as
-    # db-qualified ("temp_analytics.events_<ns>" -> table "events_<ns>" in
-    # db "temp_analytics") — flatten them
-    staging = f"temp_{spec.name.replace('.', '_')}_{time.time_ns()}"
     ordered = df.select(*spec.ordered_columns)
-    ordered.write.mode("errorifexists").format("parquet").option(
-        "compression", "snappy"
-    ).saveAsTable(staging)
+    if spec.partition_keys:
+        # REBALANCE by the partition keys clusters each output partition
+        # into one write task (1 file per partition instead of files x
+        # tasks) while AQE splits any skewed-huge partition back into
+        # multiple tasks. Row content is unchanged.
+        ordered = ordered.hint("rebalance", *spec.partition_keys)
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        cols = ", ".join(spec.ordered_columns)
-        if spec.partition_keys:
-            part = ", ".join(spec.partition_keys)
-            # REBALANCE by the partition keys clusters each output
-            # partition into one write task (1 file per partition instead
-            # of files x tasks; guide §6 'REBALANCE hint before the
-            # write') while AQE splits any skewed-huge partition back
-            # into multiple tasks — the scale-safe version of
-            # write.distribution-mode=hash.  Row content is unchanged.
-            spark.sql(
-                f"INSERT OVERWRITE TABLE {spec.name} PARTITION ({part}) "
-                f"SELECT /*+ REBALANCE({part}) */ {cols} FROM {staging}"
-            )
-        else:
-            spark.sql(f"INSERT OVERWRITE TABLE {spec.name} SELECT {cols} FROM {staging}")
+        ordered.write.insertInto(spec.name, overwrite=True)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")

@@ -284,6 +284,8 @@ def ngram_jaccard_pairs(
     cannot contribute to any intersection; sizes still come from the full
     relation.
     """
+    if shingles is not None and not {"doc", "sh"} <= set(shingles.columns):
+        raise ValueError(f"shingles needs columns doc, sh; got {shingles.columns}")
     # Content-class canonicalization (round 6): Jaccard depends only on
     # text, so compute on one representative per distinct content and
     # expand back — bit-identical output, verify cost bounded by DISTINCT

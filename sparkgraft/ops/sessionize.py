@@ -311,8 +311,9 @@ def carryover_frontier(
     across batch boundaries. Output columns:
     (user, existing_session_id, last_event_ts).
 
-    The time-slice filter happens BEFORE the window, so at scale this reads
-    one partition's tail, not the table.
+    The time-slice filter on ``ts_col`` prunes no partitions: the caller
+    must pass ``existing`` already restricted to the partitions that can
+    hold the window, or the scan reads the whole table.
     """
     boundary = F.lit(boundary_ts).cast(existing.schema[ts_col].dataType)
     gap = F.expr(f"INTERVAL {int(gap_seconds)} SECOND")

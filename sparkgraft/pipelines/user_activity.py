@@ -16,17 +16,17 @@ connector/hive/UserActivityHiveConnector.scala):
    UTC months into the edge KST-date partitions; those rows are unioned
    back so dynamic overwrite does not delete them (UserActivityHive:28-42,
    design note README:5-8)
-7. staging + dynamic INSERT OVERWRITE               (HiveConnector:34-57)
+7. dynamic INSERT OVERWRITE straight into the target (HiveConnector:34-57)
 
-Scale: each run shuffles the new events once (the sessionize window); the
-frontier is a per-user sliver read via partition pruning on the existing
-table and broadcast into the join. Rerunning any month subset is
-idempotent.
+Scale: a load reads only the month plus its boundary partitions: the
+frontier and edge rows prune to KST dates (``_kst_date_span``), the run's
+events shuffle once, and the result is written once. Rerunning any month
+subset is idempotent.
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta, timezone
+from datetime import date, datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -122,12 +122,21 @@ def normalize(raw: DataFrame) -> DataFrame:
     ).drop("event_time")
 
 
+def _kst_date_span(utc_lo: datetime, utc_hi: datetime) -> tuple[date, date]:
+    """First and last ``event_date_kst`` partition that can hold a row with
+    ``event_ts_utc`` in ``[utc_lo, utc_hi]`` (KST is UTC+9, no DST)."""
+    kst = timedelta(hours=9)
+    return (utc_lo + kst).date(), (utc_hi + kst).date()
+
+
 def _sessionize_run(
     existing: DataFrame, run_df: DataFrame, run_start: datetime
 ) -> DataFrame:
-    """Sessionize one consecutive-month run with cross-batch continuity."""
+    """Sessionize one consecutive-month run with cross-batch continuity;
+    the frontier reads only the partitions of ``[run_start - GAP, run_start]``."""
+    lo, hi = _kst_date_span(run_start - timedelta(seconds=GAP_SECONDS), run_start)
     frontier = carryover_frontier(
-        existing,
+        existing.where(F.col("event_date_kst").between(lo, hi)),
         run_start,
         user_col="user_id",
         ts_col="event_ts_utc",
@@ -150,9 +159,7 @@ def _edge_preserved_rows(
     """Existing rows living in the run's edge KST-date partitions but
     OUTSIDE the loaded UTC range — must be rewritten or dynamic overwrite
     deletes them (reference UserActivityHiveConnector.scala:28-42)."""
-    kst = timedelta(hours=9)
-    d_start = (utc_start + kst).date()
-    d_end = (utc_end + kst).date()
+    d_start, d_end = _kst_date_span(utc_start, utc_end)
     s, e = F.lit(utc_start).cast("timestamp"), F.lit(utc_end).cast("timestamp")
     return existing.where(
         F.col("event_date_kst").isin([d_start, d_end])

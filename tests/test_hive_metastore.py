@@ -10,8 +10,12 @@ from __future__ import annotations
 import subprocess
 import sys
 import textwrap
+from pathlib import Path
 
 from pyspark.sql import functions as F
+
+#: the checkout under test; the subprocess scripts import sparkgraft from it
+REPO = str(Path(__file__).resolve().parents[1])
 
 
 def test_hive_catalog_roundtrip(tmp_path):
@@ -47,7 +51,7 @@ def test_hive_catalog_roundtrip(tmp_path):
         print("HIVE_OK")
         spark.stop()
         """
-    ).format(repo="/root/repo", wh=str(tmp_path / "wh"))
+    ).format(repo=REPO, wh=str(tmp_path / "wh"))
     proc = subprocess.run(
         [sys.executable, "-c", script],
         capture_output=True,
@@ -362,7 +366,7 @@ def test_analyze_table_feeds_cbo_stats(tmp_path):
         print("CBO_OK")
         spark.stop()
         """
-    ).format(repo="/root/repo", wh=str(tmp_path / "wh"))
+    ).format(repo=REPO, wh=str(tmp_path / "wh"))
     proc = subprocess.run(
         [sys.executable, "-c", script],
         capture_output=True,
@@ -521,7 +525,7 @@ def test_compact_two_process_stress(spark, sf_dir, tmp_path):
         print("STRESS_OK_" + tag)
         spark.stop()
         """
-    ).format(repo="/root/repo", path=path, n_rows=n_rows)
+    ).format(repo=REPO, path=path, n_rows=n_rows)
 
     # the parent is a THIRD concurrent party: a version-pinning reader
     # looping across every swap the two children make
@@ -675,9 +679,10 @@ def test_table_versions_time_travel_and_restore(spark, tmp_path):
 
 
 def test_orphaned_staging_recovery(spark):
-    """A driver killed mid-load leaks its temp_<table>_<ns> staging table
-    (the finally never runs — same hole as the reference's
-    HiveConnector).  The ensure_table startup sweep must collect orphans
+    """A driver killed mid-load by an earlier, staging version of
+    load_overwrite leaked its temp_<table>_<ns> staging table (the finally
+    never ran — same hole as the reference's HiveConnector).  The
+    ensure_table startup sweep must collect orphans
     past the horizon, spare live stagings and similarly-named tables, and
     the next load must land exactly the intended rows."""
     import time
@@ -728,3 +733,76 @@ def test_orphaned_staging_recovery(spark):
     finally:
         for name in (live, other, "t_orphan"):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_load_overwrite_writes_target_directly(spark, monkeypatch):
+    """load_overwrite writes the target in one dynamic-overwrite insert:
+    a frame that reads the same partitioned table replaces only its own
+    partitions, no temp_<table>_* staging table is ever created, and a
+    session set to static overwrite still keeps untouched partitions and
+    gets its static mode back."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from sparkgraft import catalog
+
+    spec = catalog.TableSpec(
+        "t_direct",
+        StructType(
+            [
+                StructField("k", StringType()),
+                StructField("v", LongType()),
+                StructField("d", StringType()),
+            ]
+        ),
+        ("d",),
+    )
+    spark.sql("DROP TABLE IF EXISTS t_direct")
+
+    created: list[str] = []
+    save_as_table = DataFrameWriter.saveAsTable
+    session_sql = type(spark).sql
+
+    def recording_save(self, name, *args, **kwargs):
+        created.append(name)
+        return save_as_table(self, name, *args, **kwargs)
+
+    def recording_sql(self, query, *args, **kwargs):
+        created.append(query)
+        return session_sql(self, query, *args, **kwargs)
+
+    def rows():
+        return {(r.k, r.v, r.d) for r in spark.table("t_direct").collect()}
+
+    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    try:
+        catalog.load_overwrite(
+            spark,
+            spec,
+            spark.createDataFrame([("a", 1, "d1"), ("b", 2, "d2")], spec.schema),
+        )
+        monkeypatch.setattr(DataFrameWriter, "saveAsTable", recording_save)
+        monkeypatch.setattr(type(spark), "sql", recording_sql)
+
+        # the frame reads partition d1 of the target it overwrites
+        bumped = spark.table("t_direct").where("d = 'd1'").withColumn(
+            "v", F.col("v") + 10
+        )
+        catalog.load_overwrite(spark, spec, bumped)
+        assert rows() == {("a", 11, "d1"), ("b", 2, "d2")}
+
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+        catalog.load_overwrite(
+            spark, spec, spark.createDataFrame([("c", 3, "d1")], spec.schema)
+        )
+        assert rows() == {("c", 3, "d1"), ("b", 2, "d2")}
+        assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
+
+        assert not [c for c in created if "temp_t_direct" in c], created
+        assert not [
+            n for n in catalog._list_table_names(spark) if n.startswith("temp_t_direct")
+        ]
+    finally:
+        monkeypatch.undo()
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        spark.sql("DROP TABLE IF EXISTS t_direct")

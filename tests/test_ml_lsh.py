@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sparkgraft.ext import dedup, ml_lsh, simsearch
@@ -57,6 +58,15 @@ def test_shared_shingle_relation_is_bit_identical(spark, sf_dir):
         )
     )
     assert base_ml == shared_ml
+
+
+def test_shingles_without_doc_sh_columns_rejected(spark):
+    """A precomputed shingle relation must carry doc_shingles' columns;
+    anything else is refused up front instead of failing inside a plan."""
+    docs = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id long, text string")
+    wrong = dedup.doc_shingles(docs).withColumnRenamed("sh", "shingle")
+    with pytest.raises(ValueError, match="doc, sh"):
+        dedup.ngram_jaccard_pairs(docs, shingles=wrong)
 
 
 def test_ml_ann_topk_overlaps_brute_force(spark, sf_dir):

@@ -118,14 +118,44 @@ def test_wau_queries_over_table(spark, raw_dir, clean_table):
 
 def test_partition_pruning_on_curated_table(spark, raw_dir, clean_table):
     """A date-selective read of the curated table must prune to one
-    partition directory (the mechanism that makes the 5-minute continuity
-    sliver a tail read instead of a table scan at 100 TB)."""
+    partition directory (the mechanism the month load's frontier and edge
+    reads rely on; test_month_load_reads_only_pruned_partitions checks
+    that they do)."""
     ua.load_months(spark, raw_dir, ["2019-10", "2019-11"])
     df = spark.table(ua.USER_ACTIVITY.name).where("event_date_kst = DATE'2019-10-05'")
     plan = df._jdf.queryExecution().executedPlan().toString()
     import re
 
     assert re.search(r"PartitionFilters: \[[^\]]*event_date_kst#\d+ = 2019-10-05", plan), plan
+
+
+def test_month_load_reads_only_pruned_partitions(spark, raw_dir, clean_table, monkeypatch):
+    """Every scan of the target in a month load (carry-over frontier and
+    edge rows) carries a partition filter on event_date_kst, so a load
+    reads its boundary partitions, not the whole table."""
+    import re
+
+    from sparkgraft import catalog
+
+    ua.load_months(spark, raw_dir, ["2019-10"])
+    plans = []
+    load = catalog.load_overwrite
+
+    def capturing_load(spark_, spec, df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        load(spark_, spec, df)
+
+    monkeypatch.setattr(catalog, "load_overwrite", capturing_load)
+    ua.load_months(spark, raw_dir, ["2019-11"])
+    assert len(plans) == 1
+    scans = [
+        line
+        for line in plans[0].splitlines()
+        if "FileScan parquet" in line and ua.USER_ACTIVITY.name in line
+    ]
+    assert len(scans) >= 2, plans[0]  # frontier + edge rows
+    for scan in scans:
+        assert re.search(r"PartitionFilters: \[[^\]]*event_date_kst", scan), scan
 
 
 def test_run_coalescing():
