@@ -55,7 +55,6 @@ def q_corpus_decontaminate(spark, sf_dir):
     return (
         corpus.decontaminate(docs, bench, n=4)
         .select("doc_id", "lang", "source")
-        .localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT (see registry_ext)
     )
 
 
@@ -127,7 +126,7 @@ def q_corpus_pack_sequences(spark, sf_dir):
         "doc_id",
         F.col("n_tokens").cast("bigint").alias("n_tokens"),
         "seq_id",
-    ).localCheckpoint(eager=False).orderBy("source", "doc_id")  # _CKPT_BEFORE_SORT (see registry_ext)
+    )
 
 
 @register(
@@ -278,7 +277,7 @@ def q_corpus_contamination_score(spark, sf_dir):
     broadcast-probe scale shape."""
     docs = _t(spark, sf_dir, "documents")
     bench = corpus.benchmark_shingles(spark, BENCHMARK_PHRASES, n=4)
-    return corpus.contamination_score(docs, bench, n=4).localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT (see registry_ext)
+    return corpus.contamination_score(docs, bench, n=4)
 
 
 @register(
@@ -542,7 +541,6 @@ def q_corpus_e2e_curation(spark, sf_dir):
             & (F.col("rep_ratio") <= 0.9)
         )
         .select("doc_id", "n_tokens", "quality_score", "rep_ratio")
-        .localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT (see registry_ext)
     )
 
 

@@ -56,35 +56,6 @@ _SHINGLE_SET_CTES = (
 )
 
 
-#: _CKPT_BEFORE_SORT — why the media-decode lanes insert a LAZY
-#: ``localCheckpoint(eager=False)`` between the decode chain and their
-#: terminal ``orderBy``: a global sort range-partitions its input, and the
-#: RangePartitioner's boundary-sampling pass executes the child once in
-#: full BEFORE the real pass — for an opaque Arrow/Python decode chain
-#: that means every payload is synthesized and decoded TWICE (measured
-#: +1.5 s of the jpeg_rst lane's 2.9 s).  The lazy checkpoint is
-#: materialized by the sampling job itself and reused by the shuffle, so
-#: the chain runs exactly once; row content and final order are
-#: unchanged.  At 100 TB the same rule holds: materialize an expensive
-#: opaque stage before a global sort instead of letting the sampler
-#: recompute it (guide §1.2/§5 — cache only what is reused AND expensive).
-#:
-#: Two scale/shape caveats (r13 verdict item 5; r14 measurements):
-#: - ``localCheckpoint`` blocks are EXECUTOR-LOCAL and non-recoverable —
-#:   on a real cluster with executor churn use the reliable
-#:   ``.checkpoint()`` (these relations are small post-agg/decode
-#:   outputs, so the risk is restart cost, not memory).
-#: - Only worth it when the re-executed subtree is expensive AND
-#:   exchange-free (decode chains). Under AQE the sort sampler re-runs
-#:   only the post-last-shuffle tail, and a lazy localCheckpoint on an
-#:   AQE plan EAGERLY executes every intermediate query stage at build
-#:   plus a block-store copy — a measured net LOSS on join/agg-shaped
-#:   lanes (r14: trade_pagerank 3.54→4.09 s, value_mad 1.87→2.52 s with
-#:   the checkpoint), which is why the six plan-gated lanes do NOT carry
-#:   one.  The surviving shuffle-bearing sites were re-A/B'd and keep a
-#:   small win (text_bigram_lm_score 1.35 vs 1.53 s without).
-
-
 def _t(spark, sf_dir, name):
     return read_table(spark, sf_dir, name)
 
@@ -541,7 +512,6 @@ def q_dedup_keep_canonical(spark, sf_dir):
                 "is_dup"
             ),
         )
-        .localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT
     )
 
 
@@ -908,7 +878,7 @@ def q_embed_semantic_dedup(spark, sf_dir):
     the O(N²/C) embedding-dedup shape for corpus scale.
     Finite-embedding domain declared (simsearch.finite_vectors)."""
     emb = simsearch.finite_vectors(_t(spark, sf_dir, "embeddings"))
-    return simsearch.semantic_dedup(emb, 0.45).localCheckpoint(eager=False).orderBy("vec_id")  # _CKPT_BEFORE_SORT
+    return simsearch.semantic_dedup(emb, 0.45)
 
 
 @register(
@@ -1430,7 +1400,7 @@ def q_multimodal_decode_png(spark, sf_dir):
         "n_pixels",
         "pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    )
 
 
 @register(
@@ -1506,7 +1476,7 @@ def q_multimodal_decode_png_palette(spark, sf_dir):
         "n_pixels",
         "pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    )
 
 
 @register(
@@ -1588,7 +1558,7 @@ def q_multimodal_decode_png_adam7(spark, sf_dir):
         "n_pixels",
         "pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    )
 
 
 @register(
@@ -1664,7 +1634,7 @@ def q_multimodal_decode_wav(spark, sf_dir):
         "abs_peak",
         "duration_ms",
         (F.col("pcm_md5") == F.col("source_md5")).alias("pcm_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    )
 
 
 @register(
@@ -1738,7 +1708,7 @@ def q_multimodal_resize_real(spark, sf_dir):
         "out_pixels",
         "out_pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    )
 
 
 @register(
@@ -1814,7 +1784,7 @@ def q_multimodal_frames_gif(spark, sf_dir):
         "n_frames",
         "pixel_sum",
         (F.col("anim_md5") == F.col("source_md5")).alias("frames_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id", "frame_idx")  # _CKPT_BEFORE_SORT
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1847,7 +1817,7 @@ def q_text_bigram_lm_score(spark, sf_dir):
     bigram counts) — sequence-level fluency signal one rung above the
     unigram score; row-wise pair construction, vocabulary-bounded count
     relations (ext/text.bigram_logprob; parity design in its docstring)."""
-    return text.bigram_logprob(_t(spark, sf_dir, "documents")).localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT
+    return text.bigram_logprob(_t(spark, sf_dir, "documents"))
 
 
 _KNN_CTE_PREFIX = f"""
@@ -1862,15 +1832,6 @@ _KNN_CTE_PREFIX = f"""
                                          ORDER BY cosine DESC, dst) AS rn
             FROM scored)
       WHERE rn <= 3)"""
-
-
-def _embed_knn_graph_relation(spark, sf_dir):
-    """Pre-sort relation of q_embed_knn_graph, SHARED with its plan gate
-    (tests/test_plans.py test_knn_graph_blocked_no_cartesian); same
-    rationale as registry._window_rank_zoo_relation."""
-    return simsearch.knn_graph(
-        simsearch.finite_vectors(_t(spark, sf_dir, "embeddings")), k=3
-    )
 
 
 @register(
@@ -1890,9 +1851,10 @@ def q_embed_knn_graph(spark, sf_dir):
     the mutual-kNN flag. Block-matrix scoring with per-block partial
     top-k so the shuffle carries <= B*k candidates per node
     (ext/simsearch.knn_graph).  Finite-embedding domain declared
-    (simsearch.finite_vectors).  (The plan gate grades the shared
-    _embed_knn_graph_relation builder.)"""
-    return _embed_knn_graph_relation(spark, sf_dir).orderBy("vec_a", "vec_b")
+    (simsearch.finite_vectors)."""
+    return simsearch.knn_graph(
+        simsearch.finite_vectors(_t(spark, sf_dir, "embeddings")), k=3
+    )
 
 
 def _dup_ngram_d(n: int) -> str:
@@ -1917,7 +1879,7 @@ def q_text_gopher_repetition(spark, sf_dir):
     of n-gram occurrences that repeat — the looping-text filter unigram
     repetition misses. Per-row array expressions, zero shuffle
     (ext/text.gopher_repetition)."""
-    return text.gopher_repetition(_t(spark, sf_dir, "documents")).localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT
+    return text.gopher_repetition(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -2383,16 +2345,7 @@ def q_graph_triangle_count(spark, sf_dir):
     skewed graphs (the hub that would explode a naive neighbor self-join
     gets rank-ordered OUT of the wedge-generating role).  Edge relation
     comes from ext/simsearch.knn_graph (blocked scoring, no cartesian);
-    the triangle phase is two equi-joins + a 3-way union rollup.  (The
-    plan gates grade the shared _graph_triangle_count_relation builder.)"""
-    return _graph_triangle_count_relation(spark, sf_dir).orderBy("node")
-
-
-def _graph_triangle_count_relation(spark, sf_dir):
-    """Pre-sort relation of q_graph_triangle_count, SHARED with its plan
-    gates (tests/test_plans.py test_triangle_count_equi_joins_only /
-    test_triangle_count_materializes_knn_once); same rationale as
-    registry._window_rank_zoo_relation."""
+    the triangle phase is two equi-joins + a 3-way union rollup."""
     # materialize the edge list once: the triangle phase references it
     # five times (degree, both orientation joins, both wedge legs, the
     # closure), and without a checkpoint Spark re-executes the ENTIRE
@@ -2478,7 +2431,7 @@ def q_graph_triangle_lsh(spark, sf_dir):
     declared quadratic."""
     return simsearch.lsh_triangle_counts(
         simsearch.finite_vectors(_t(spark, sf_dir, "embeddings")), threshold=0.2
-    ).localCheckpoint(eager=False).orderBy("node")  # _CKPT_BEFORE_SORT
+    )
 
 
 def _pq_oracle(
@@ -2737,7 +2690,7 @@ def q_text_bpe_encode(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     wf = bpe.word_freqs(docs).filter(~F.col("word").rlike("[()]"))
     _, final_seqs = bpe.learn_merges(wf, 4)
-    return bpe.encode_token_counts(docs, final_seqs).localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT
+    return bpe.encode_token_counts(docs, final_seqs)
 
 
 @register(
@@ -2812,7 +2765,7 @@ def q_multimodal_audio_fft(spark, sf_dir):
         "sample_sum",
         "abs_peak",
         (F.col("pcm_md5") == F.col("source_md5")).alias("pcm_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # _CKPT_BEFORE_SORT
+    )
 
 
 @register(
@@ -2843,7 +2796,7 @@ def q_sketch_count_min_audit(spark, sf_dir):
     one-pass cm_cells path.  (Registered post-r10-freeze: first driver
     proof lands with the r11 rotation.)"""
     events = _t(spark, sf_dir, "events")
-    return sketch.cm_estimate_audit(events, "user_id").localCheckpoint(eager=False).orderBy("user_id")  # _CKPT_BEFORE_SORT
+    return sketch.cm_estimate_audit(events, "user_id")
 
 
 @register(
@@ -2921,7 +2874,7 @@ def q_multimodal_decode_jpeg(spark, sf_dir):
         "n_pixels",
         "pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    )
 
 
 @register(
@@ -3017,7 +2970,7 @@ def q_multimodal_decode_jpeg_color(spark, sf_dir):
         "g_sum",
         "b_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    )
 
 
 @register(
@@ -3104,7 +3057,7 @@ def q_multimodal_decode_jpeg_420(spark, sf_dir):
         "g_sum",
         "b_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    )
 
 
 @register(
@@ -3201,7 +3154,7 @@ def q_multimodal_decode_jpeg_rst(spark, sf_dir):
         "g_sum",
         "b_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    )
 
 
 @register(
@@ -3279,7 +3232,7 @@ def q_multimodal_decode_jpeg_prog(spark, sf_dir):
         "n_rst",
         "pixel_sum",
         (F.col("pixel_md5") == F.col("source_md5")).alias("pixels_match"),
-    ).localCheckpoint(eager=False).orderBy("doc_id")  # ckpt: sort sampling must not re-run the decode chain (see _CKPT_BEFORE_SORT)
+    )
 
 
 @register(
@@ -3379,9 +3332,7 @@ def q_streaming_count_min(spark, sf_dir):
     )
     for row in merged:
         grid[row["r"]][row["bucket"]] = int(row["mass"])
-    return sketch.audit_against_grid(
-        _t(spark, sf_dir, "events"), "user_id", grid
-    ).localCheckpoint(eager=False).orderBy("user_id")  # _CKPT_BEFORE_SORT
+    return sketch.audit_against_grid(_t(spark, sf_dir, "events"), "user_id", grid)
 
 
 @register(
@@ -3538,9 +3489,7 @@ def q_sketch_hll_linear_audit(spark, sf_dir):
     expression, nothing broadcast, nothing collected.  (Registered
     post-r11-freeze: first driver proof lands with the r11 rotation.)"""
     events = _t(spark, sf_dir, "events")
-    return sketch.hll_lc_multi_probe_audit(
-        events, _HLL_LC_PROBES
-    ).localCheckpoint(eager=False).orderBy("probe")  # _CKPT_BEFORE_SORT
+    return sketch.hll_lc_multi_probe_audit(events, _HLL_LC_PROBES)
 
 
 _SKETCH_CACHE_FLAGS = (
@@ -3669,4 +3618,4 @@ def q_sketch_stats_cache_audit(spark, sf_dir):
     out = sketch.audit_against_grid(events, "user_id", cm_cached)
     for name in _SKETCH_CACHE_FLAGS:
         out = out.withColumn(name, F.lit(bool(flags[name])))
-    return out.localCheckpoint(eager=False).orderBy("user_id")  # _CKPT_BEFORE_SORT
+    return out

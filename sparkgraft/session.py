@@ -24,6 +24,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
+#: directory holding the ``sparkgraft`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _default_master() -> str:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -86,6 +89,13 @@ def get_spark(
         )
     if extra_conf:
         conf.update(extra_conf)
+    # Python workers unpickle functions defined in this package (the Arrow
+    # codec lanes); put the package's root on their path, after any
+    # caller-provided entries, so a session started from any working
+    # directory can run them.  Spark merges it with its own worker path.
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (conf.get("spark.executorEnv.PYTHONPATH"), _PACKAGE_ROOT) if p
+    )
 
     for k, v in conf.items():
         builder = builder.config(k, v)

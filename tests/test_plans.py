@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from sparkgraft import registry, registry_ext
+from sparkgraft import registry
 
 
 def _plan(spark, sf_dir, name):
@@ -24,23 +24,6 @@ def _final_plan(spark, sf_dir, name):
     hint-pinned (a hard F.broadcast(customer) is wrong at 100 TB) — AQE
     decides from runtime stats, so the shape to grade is the FINAL plan."""
     df = registry.queries()[name](spark, sf_dir)
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _builder_plan(builder, spark, sf_dir):
-    """Plan of a shared pre-terminal relation builder.  Six gated lanes
-    are split into builder + terminal sort so the gates can grade the
-    shipped shape independently of whatever materialization sits in front
-    of the sort (the registry._bucketed_join_relation pattern: the query
-    itself calls the builder, so any edit to the shipped shape is
-    automatically the shape graded here)."""
-    return builder(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-
-
-def _builder_final_plan(builder, spark, sf_dir):
-    """Post-execution (final AQE) plan of a shared builder relation."""
-    df = builder(spark, sf_dir)
     df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -360,7 +343,7 @@ def test_peak_concurrent_two_level_sweep(spark, sf_dir):
     SinglePartition exchange or a day-less sweep windowspec."""
     import re
 
-    plan = _builder_plan(registry._peak_concurrent_relation, spark, sf_dir)
+    plan = _plan(spark, sf_dir, "peak_concurrent_sessions")
     assert plan.count("Exchange SinglePartition") <= 1, plan
     sweeps = re.findall(r"windowspecdefinition\(day#\d+, bts#\d+", plan)
     assert sweeps, f"day-partitioned sweep window missing: {plan}"
@@ -380,7 +363,7 @@ def test_trade_pagerank_edges_materialized_once(spark, sf_dir):
     """The q5-shaped edge build must run ONCE (localCheckpoint): the final
     iterated plan may reference the checkpointed RDD 10 times but must
     never re-scan lineitem, and iteration joins must stay equi-joins."""
-    plan = _builder_plan(registry._trade_pagerank_relation, spark, sf_dir)
+    plan = _plan(spark, sf_dir, "trade_pagerank")
     assert "lineitem" not in plan, "edge join re-executes per iteration"
     assert "ExistingRDD" in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -425,7 +408,7 @@ def test_window_zoo_closed_forms_no_builtin_rank_functions(spark, sf_dir):
     builtin rank-family window functions may appear in the plan (their
     builtin forms would demand the giant per-event_type sort this query
     was re-planned to avoid)."""
-    plan = _builder_plan(registry._window_rank_zoo_relation, spark, sf_dir)
+    plan = _plan(spark, sf_dir, "window_rank_zoo")
     for fn in ("percent_rank()", "cume_dist()", "nth_value("):
         assert fn not in plan, f"builtin {fn} reintroduces the giant sort: {plan}"
 
@@ -486,7 +469,7 @@ def test_window_rank_zoo_two_level_rank_no_lowcard_window(spark, sf_dir):
     ordered window over the low-cardinality event_type key."""
     import re
 
-    plan = _builder_plan(registry._window_rank_zoo_relation, spark, sf_dir)
+    plan = _plan(spark, sf_dir, "window_rank_zoo")
     assert not re.search(r"windowspecdefinition\(event_type#\d+, (value|event_id)#", plan), plan
     assert re.search(r"row_number\(\) windowspecdefinition\(event_type#\d+, __chunk#", plan), plan
     assert "CartesianProduct" not in plan, plan
@@ -509,7 +492,7 @@ def test_knn_graph_blocked_no_cartesian(spark, sf_dir):
     global top-k window partitions on the high-cardinality node id."""
     import re
 
-    plan = _builder_plan(registry_ext._embed_knn_graph_relation, spark, sf_dir)
+    plan = _plan(spark, sf_dir, "embed_knn_graph")
     assert "FlatMapCoGroupsInPandas" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -680,7 +663,7 @@ def test_triangle_count_equi_joins_only(spark, sf_dir):
     """Wedge generation and closure must be equi-joins (the rank filter is
     a post-join predicate on an equi-key join) — no cartesian, no
     broadcast nested loop anywhere in the triangle phase."""
-    plan = _builder_final_plan(registry_ext._graph_triangle_count_relation, spark, sf_dir)
+    plan = _final_plan(spark, sf_dir, "graph_triangle_count")
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -728,7 +711,7 @@ def test_triangle_count_materializes_knn_once(spark, sf_dir):
     triangle phase must NOT re-execute the blocked-kNN DAG per reference
     (pre-fix plan audit: 229 exchanges; the triangle joins alone need
     far fewer)."""
-    plan = _builder_final_plan(registry_ext._graph_triangle_count_relation, spark, sf_dir)
+    plan = _final_plan(spark, sf_dir, "graph_triangle_count")
     assert plan.count("Exchange hashpartitioning") < 30, plan.count(
         "Exchange hashpartitioning"
     )
@@ -770,7 +753,7 @@ def test_mad_outliers_two_level_rank_no_lowcard_window(spark, sf_dir):
     never over raw (value|dev) rows (same gate as value_median_exact)."""
     import re
 
-    plan = _builder_plan(registry._value_mad_outliers_relation, spark, sf_dir)
+    plan = _plan(spark, sf_dir, "value_mad_outliers")
     assert not re.search(
         r"windowspecdefinition\(event_type#\d+, (value|dev|event_id)#", plan
     ), plan
@@ -816,3 +799,18 @@ def test_bucketed_join_no_exchange_below_the_join(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql(f"DROP TABLE IF EXISTS {tl}")
         spark.sql(f"DROP TABLE IF EXISTS {to}")
+
+
+@pytest.mark.parametrize("name", ["multimodal_decode_png", "text_bigram_lm_score"])
+def test_unordered_lane_has_no_presentation_sort(spark, sf_dir, name):
+    """Lanes return unordered relations (registry module docstring): with
+    no terminal orderBy there is no global Sort, no range-partitioning
+    exchange whose sampling job would run the decode/scoring chain a
+    second time, and no checkpointed RDD (block-store copy) in front of
+    it — the chain runs once, straight into the action."""
+    import re
+
+    plan = _plan(spark, sf_dir, name)
+    assert not re.search(r"\bSort \[[^\]]*\], true", plan), plan
+    assert "rangepartitioning" not in plan, plan
+    assert "ExistingRDD" not in plan, plan
