@@ -188,14 +188,19 @@ def read_spec_evolved(spark: SparkSession, path: str, spec: TableSpec) -> DataFr
     return read_evolved(spark, path, spec.schema, history=history)
 
 
-def sweep_stale_staging(
-    spark: SparkSession, table_name: str, horizon_s: float = 3600.0
+def _sweep_staging_from(
+    spark: SparkSession,
+    table_name: str,
+    names: list[str],
+    horizon_s: float = 3600.0,
 ) -> list[str]:
     """Drop orphaned ``temp_<table>_<ns>`` staging tables older than
-    ``horizon_s`` — the recovery for a driver killed between an earlier
-    ``load_overwrite``'s staging write and its ``finally`` drop (the
-    reference has the same hole: HiveConnector.scala:37-56 drops staging
-    only on the happy path).
+    ``horizon_s`` from an already-fetched table listing (ensure_table's,
+    so the sweep costs no second metastore trip).  Earlier versions of
+    ``load_overwrite`` staged through such tables, and a driver killed
+    between the staging write and its ``finally`` drop left them behind
+    (the reference has the same hole: HiveConnector.scala:37-56 drops
+    staging only on the happy path).
 
     The creation timestamp is IN the name (``time.time_ns()`` suffix), so
     age needs no filesystem stat: anything past the horizon is debris —
@@ -204,19 +209,6 @@ def sweep_stale_staging(
     anchored to this table's exact ``temp_{flat}_<digits>`` shape;
     another table's staging (or a user table that merely starts with
     ``temp_``) never matches."""
-    return _sweep_staging_from(
-        spark, table_name, _list_table_names(spark), horizon_s
-    )
-
-
-def _sweep_staging_from(
-    spark: SparkSession,
-    table_name: str,
-    names: list[str],
-    horizon_s: float = 3600.0,
-) -> list[str]:
-    """The sweep body over an already-fetched table listing, so callers
-    holding a listing (ensure_table) don't pay a second metastore trip."""
     import re
 
     flat = table_name.replace(".", "_")

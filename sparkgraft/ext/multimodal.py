@@ -24,14 +24,26 @@ library at all: :func:`resize_png_features` decodes and nearest-neighbor
 resamples REAL pixels (numpy gather over the stdlib-decoded matrix), so
 the former PIL boundary survives only in ``resize_stub``'s
 geometry-only planner.
+
+Every per-row codec stage — the ``synth_*_payloads`` fixture generators
+and the real decode/feature stages — has ONE shape, :func:`_map_rows`:
+the stage states its output DDL and a per-row function, and the helper
+owns the Arrow-batch loop, NULL payloads, pass-through columns and the
+nullable integer typing.  Only the vectorized stubs (``decode_features``,
+``frame_sample``, ``resize_stub``) and the seek-ordered
+``fetch_payload_ranges`` keep their own batch loops.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from sparkgraft.ext import gif as _gif, jpeg as _jpeg, png as _png, wav as _wav
 
 #: output schema of the decode stage. width/height are REAL decoded
 #: dimensions on the PNG path, byte-derived pseudo-dimensions on the
@@ -40,6 +52,84 @@ from pyspark.sql import DataFrame, functions as F
 DECODE_SCHEMA = (
     "doc_id bigint, n_bytes int, head_byte int, width int, height int"
 )
+
+#: pandas dtype per DDL integer type: nullable, so a NULL feature survives
+#: the Arrow hop instead of forcing the column to float
+_NULLABLE = {"int": "Int32", "bigint": "Int64"}
+
+
+def _md5(b: bytes) -> str:
+    return hashlib.md5(b).hexdigest()
+
+
+def _map_rows(
+    df: DataFrame,
+    schema: str,
+    decode: Callable,
+    row: Callable,
+    key: str = "payload",
+    id_col: str = "doc_id",
+    fan_out: bool = False,
+) -> DataFrame:
+    """The one shape of a per-row codec stage: an Arrow-batched
+    ``mapInPandas`` that emits ``row(decode(v))`` for each ``key`` cell.
+
+    ``schema`` is the stage's output DDL with ``doc_id`` (read from
+    ``id_col``) first; ``row`` returns a dict over the other declared
+    names (extra keys are ignored), or a list of such dicts when
+    ``fan_out`` — one output row each.  A NULL ``key`` cell yields NULL
+    features, or zero rows when ``fan_out``.  Every input column other
+    than ``id_col``/``key`` passes through in input order, appended to the
+    schema (replicated onto each fanned-out row).  Column dtypes come from
+    the DDL via ``_NULLABLE``, so each type is stated once."""
+    declared = [f.split() for f in schema.split(",")]
+    rest = [(c, t) for c, t in df.dtypes if c not in (id_col, key)]
+    schema += "".join(f", {c} {t}" for c, t in rest)
+    names = [n for n, _ in declared[1:]]
+    dtypes = {n: _NULLABLE.get(t) for n, t in declared + rest}
+
+    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            src: list[int] = []
+            recs: list[dict | None] = []
+            for j, v in enumerate(pdf[key]):
+                if v is None:
+                    got = [] if fan_out else [None]
+                else:
+                    got = row(decode(v))
+                    if not fan_out:
+                        got = [got]
+                src += [j] * len(got)
+                recs += got
+            cols = {"doc_id": pdf[id_col].to_numpy()[src]}
+            for n in names:
+                cols[n] = [None if r is None else r[n] for r in recs]
+            for c, _ in rest:
+                cols[c] = pdf[c].to_numpy()[src]
+            yield pd.DataFrame(
+                {n: pd.Series(v, dtype=dtypes[n]) for n, v in cols.items()}
+            )
+
+    return df.mapInPandas(_batches, schema)
+
+
+def _synth_payloads(
+    df: DataFrame, id_col: str, make: Callable, counts: tuple[str, ...] = ()
+) -> DataFrame:
+    """A fixture generator over ``_map_rows``: ``make(id)`` returns
+    ``(payload, source, *counts)`` and the row becomes (doc_id, payload,
+    source_md5 = md5(source), *counts) — ``source`` is the ground truth
+    the decode stage must reproduce."""
+    names = ("payload", "source_md5", *counts)
+
+    def row(i: int) -> dict:
+        payload, source, *extra = make(i)
+        return dict(zip(names, (payload, _md5(source), *extra)))
+
+    schema = "doc_id bigint, payload binary, source_md5 string" + "".join(
+        f", {c} bigint" for c in counts
+    )
+    return _map_rows(df.select(id_col), schema, int, row, key=id_col, id_col=id_col)
 
 
 def attach_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -58,9 +148,7 @@ def attach_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def decode_features(
-    df: DataFrame, fake: bool = False, batch_hint: int | None = None
-) -> DataFrame:
+def decode_features(df: DataFrame, fake: bool = False) -> DataFrame:
     """Arrow-batched decode/feature-extract over binary payloads.
 
     ``fake=False`` decodes FOR REAL: PNG payloads go through the
@@ -75,9 +163,9 @@ def decode_features(
     pseudo-dimensions) for fixtures whose payloads are arbitrary bytes,
     so every downstream stage stays exercisable on any corpus.
     """
-    from sparkgraft.ext import png as _png
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        int32 = _NULLABLE["int"]
         for pdf in batches:
             payloads = pdf["payload"]
             # nullable Int32 end to end: a NULL payload (absent media)
@@ -85,13 +173,15 @@ def decode_features(
             # and the oracle's byte arithmetic over NULL text is NULL
             n_bytes = payloads.map(
                 lambda b: None if b is None else len(b)
-            ).astype("Int32")
+            ).astype(int32)
             head = payloads.map(
                 lambda b: None if b is None else (b[0] if len(b) else 0)
-            ).astype("Int32")
+            ).astype(int32)
             if fake:
-                width = (n_bytes % 640).astype("Int32")
-                height = (head.astype("Int64") * 3 % 480).astype("Int32")
+                width = (n_bytes % 640).astype(int32)
+                height = (
+                    head.astype(_NULLABLE["bigint"]) * 3 % 480
+                ).astype(int32)
             else:
                 dims = []
                 for b in payloads:
@@ -108,10 +198,10 @@ def decode_features(
                     d = _png.decode(bytes(b))
                     dims.append((d["width"], d["height"]))
                 width = pd.Series(
-                    [w for w, _ in dims], index=pdf.index, dtype="Int32"
+                    [w for w, _ in dims], index=pdf.index, dtype=int32
                 )
                 height = pd.Series(
-                    [h for _, h in dims], index=pdf.index, dtype="Int32"
+                    [h for _, h in dims], index=pdf.index, dtype=int32
                 )
             yield pd.DataFrame(
                 {
@@ -145,7 +235,6 @@ def frame_sample(
     Arrow-batched ``mapInPandas``; emits (doc_id, frame_idx, n_bytes,
     frame_md5) — 1:N row fan-out, the shape a real frame extractor has.
     """
-    import hashlib
 
     def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -185,6 +274,7 @@ def resize_stub(
     stub dimensions."""
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        int32 = _NULLABLE["int"]
         for pdf in batches:
             if not fake:
                 raise NotImplementedError(
@@ -199,12 +289,12 @@ def resize_stub(
             # the decode->resize chain one operator after the decode fix.
             # NULL dims plan a NULL resize (out_width included: no media,
             # no plan), and <NA> propagates through the geometry math.
-            w = pdf["width"].astype("Int32").clip(lower=1)
-            h = pdf["height"].astype("Int32").clip(lower=1)
+            w = pdf["width"].astype(int32).clip(lower=1)
+            h = pdf["height"].astype(int32).clip(lower=1)
             out_h = (
-                (h.astype("Float64") * target_width / w).round().astype("Int32")
+                (h.astype("Float64") * target_width / w).round().astype(int32)
             ).clip(lower=1)
-            out_w = pd.Series(target_width, index=pdf.index, dtype="Int32").where(
+            out_w = pd.Series(target_width, index=pdf.index, dtype=int32).where(
                 w.notna()
             )
             yield pd.DataFrame(
@@ -240,26 +330,14 @@ def synth_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     oracle can predict the DECODED width/height/pixel_sum without being
     able to parse PNG at all — the codec sits inside a relation both
     engines can state."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import png as _png
+    def make(i: int) -> tuple:
+        w, h = 4 + i % 13, 3 + i % 7
+        px = bytes((i * 31 + j) % 256 for j in range(w * h))
+        filters = [(i + y) % 5 for y in range(h)]
+        return _png.encode(w, h, px, filters=filters), px
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "source_md5": []}
-            for i in pdf[id_col]:
-                i = int(i)
-                w, h = 4 + i % 13, 3 + i % 7
-                px = bytes((i * 31 + j) % 256 for j in range(w * h))
-                filters = [(i + y) % 5 for y in range(h)]
-                out["doc_id"].append(i)
-                out["payload"].append(_png.encode(w, h, px, filters=filters))
-                out["source_md5"].append(hashlib.md5(px).hexdigest())
-            yield pd.DataFrame(out)
-
-    return df.select(id_col).mapInPandas(
-        _synth, "doc_id bigint, payload binary, source_md5 string"
-    )
+    return _synth_payloads(df, id_col, make)
 
 
 #: paletted-fixture arithmetic shared by the synth generators and stated
@@ -294,38 +372,25 @@ def synth_png_palette_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFra
     so the decode stage proves index unpacking AND palette application
     bit-for-bit.  Pure integer arithmetic on the id throughout, so a SQL
     oracle states the decoded pixel_sum without parsing PNG."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import png as _png
+    def make(i: int) -> tuple:
+        w, h = 4 + i % 13, 3 + i % 7
+        depth = _PAL_DEPTHS[i % 4]
+        nc = _PAL_COLORS[depth]
+        pal = _synth_palette(i, nc)
+        idx = bytes((i * 31 + j) % nc for j in range(w * h))
+        payload = _png.encode(
+            w,
+            h,
+            idx,
+            color_type=3,
+            bit_depth=depth,
+            palette=pal,
+            filters=[(i + y) % 5 for y in range(h)],
+        )
+        return payload, b"".join(pal[v * 3 : v * 3 + 3] for v in idx)
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "source_md5": []}
-            for i in pdf[id_col]:
-                i = int(i)
-                w, h = 4 + i % 13, 3 + i % 7
-                depth = _PAL_DEPTHS[i % 4]
-                nc = _PAL_COLORS[depth]
-                pal = _synth_palette(i, nc)
-                idx = bytes((i * 31 + j) % nc for j in range(w * h))
-                rgb = b"".join(pal[v * 3 : v * 3 + 3] for v in idx)
-                payload = _png.encode(
-                    w,
-                    h,
-                    idx,
-                    color_type=3,
-                    bit_depth=depth,
-                    palette=pal,
-                    filters=[(i + y) % 5 for y in range(h)],
-                )
-                out["doc_id"].append(i)
-                out["payload"].append(payload)
-                out["source_md5"].append(hashlib.md5(rgb).hexdigest())
-            yield pd.DataFrame(out)
-
-    return df.select(id_col).mapInPandas(
-        _synth, "doc_id bigint, payload binary, source_md5 string"
-    )
+    return _synth_payloads(df, id_col, make)
 
 
 def synth_png_adam7_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -339,44 +404,28 @@ def synth_png_adam7_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     full per-pass scanline sequence ``(id + k) % 5``.  ``source_md5``
     digests the de-interlaced (palette-expanded) samples, so decode
     proves the whole pass-scatter grid bit-for-bit."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import png as _png
+    def make(i: int) -> tuple:
+        w, h = 3 + i % 14, 2 + i % 11
+        ct = (0, 2, 3, 6)[i % 4]
+        nl = _png.scanline_count(w, h, 1)
+        filters = [(i + k) % 5 for k in range(nl)]
+        if ct == 3:
+            pal = _synth_palette(i, 16)
+            idx = bytes((i * 31 + j) % 16 for j in range(w * h))
+            payload = _png.encode(
+                w, h, idx, color_type=3, bit_depth=4,
+                palette=pal, filters=filters, interlace=1,
+            )
+            return payload, b"".join(pal[v * 3 : v * 3 + 3] for v in idx)
+        ch = {0: 1, 2: 3, 6: 4}[ct]
+        source = bytes((i * 31 + j) % 256 for j in range(w * h * ch))
+        payload = _png.encode(
+            w, h, source, color_type=ct, filters=filters, interlace=1,
+        )
+        return payload, source
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "source_md5": []}
-            for i in pdf[id_col]:
-                i = int(i)
-                w, h = 3 + i % 14, 2 + i % 11
-                ct = (0, 2, 3, 6)[i % 4]
-                nl = _png.scanline_count(w, h, 1)
-                filters = [(i + k) % 5 for k in range(nl)]
-                if ct == 3:
-                    pal = _synth_palette(i, 16)
-                    idx = bytes((i * 31 + j) % 16 for j in range(w * h))
-                    source = b"".join(pal[v * 3 : v * 3 + 3] for v in idx)
-                    payload = _png.encode(
-                        w, h, idx, color_type=3, bit_depth=4,
-                        palette=pal, filters=filters, interlace=1,
-                    )
-                else:
-                    ch = {0: 1, 2: 3, 6: 4}[ct]
-                    source = bytes(
-                        (i * 31 + j) % 256 for j in range(w * h * ch)
-                    )
-                    payload = _png.encode(
-                        w, h, source, color_type=ct,
-                        filters=filters, interlace=1,
-                    )
-                out["doc_id"].append(i)
-                out["payload"].append(payload)
-                out["source_md5"].append(hashlib.md5(source).hexdigest())
-            yield pd.DataFrame(out)
-
-    return df.select(id_col).mapInPandas(
-        _synth, "doc_id bigint, payload binary, source_md5 string"
-    )
+    return _synth_payloads(df, id_col, make)
 
 
 def decode_png_features(
@@ -399,59 +448,20 @@ def decode_png_features(
     NULL payloads (absent media) emit NULL features, same convention as
     ``decode_features``.  Extra input columns are passed through, so a
     generator stage can ship ground truth (``source_md5``) alongside."""
-    import hashlib
 
-    passthrough = [c for c in df.columns if c not in (id_col, "payload")]
+    def row(d: dict) -> dict:
+        px = d["pixels"]
+        return {
+            **d,
+            "n_pixels": d["width"] * d["height"],
+            "pixel_sum": sum(px),
+            "pixel_md5": _md5(px),
+        }
+
     schema = PNG_FEATURES_SCHEMA
     if include_interlace:
         schema += ", interlace int"
-    schema += "".join(
-        f", {c} {t}" for c, t in df.dtypes if c in passthrough
-    )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import png as _png
-
-        for pdf in batches:
-            n = len(pdf)
-            cols = {
-                "width": [None] * n,
-                "height": [None] * n,
-                "bit_depth": [None] * n,
-                "color_type": [None] * n,
-                "n_pixels": [None] * n,
-                "pixel_sum": [None] * n,
-                "pixel_md5": [None] * n,
-                "interlace": [None] * n,
-            }
-            for row, b in enumerate(pdf["payload"]):
-                if b is None:
-                    continue
-                d = _png.decode(bytes(b))
-                px = d["pixels"]
-                cols["width"][row] = d["width"]
-                cols["height"][row] = d["height"]
-                cols["bit_depth"][row] = d["bit_depth"]
-                cols["color_type"][row] = d["color_type"]
-                cols["n_pixels"][row] = d["width"] * d["height"]
-                cols["pixel_sum"][row] = sum(px)
-                cols["pixel_md5"][row] = hashlib.md5(px).hexdigest()
-                cols["interlace"][row] = d["interlace"]
-            out = {"doc_id": pdf[id_col].to_numpy()}
-            for k in ("width", "height", "bit_depth", "color_type"):
-                out[k] = pd.Series(cols[k], index=pdf.index, dtype="Int32")
-            for k in ("n_pixels", "pixel_sum"):
-                out[k] = pd.Series(cols[k], index=pdf.index, dtype="Int64")
-            out["pixel_md5"] = cols["pixel_md5"]
-            if include_interlace:  # same position as in the schema string
-                out["interlace"] = pd.Series(
-                    cols["interlace"], index=pdf.index, dtype="Int32"
-                )
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_decode, schema)
+    return _map_rows(df, schema, _png.decode, row, id_col=id_col)
 
 
 #: decode-and-resample feature schema (resize_png_features)
@@ -476,8 +486,6 @@ def nearest_resample(
 
     Vectorized as a numpy double-gather (two index vectors + ``np.ix_``),
     no per-pixel Python loop; cost is O(out pixels) per image."""
-    import numpy as np
-
     if width <= 0 or height <= 0 or out_width <= 0 or out_height <= 0:
         raise ValueError(
             f"nearest_resample: extents must be positive, got "
@@ -517,59 +525,23 @@ def resize_png_features(
     shuffle, no driver traffic; output size is images x out-pixels
     regardless of source resolution, so a mixed-resolution 100 TB corpus
     normalizes without a skewed stage."""
-    import hashlib
 
-    passthrough = [c for c in df.columns if c not in (id_col, "payload")]
-    schema = RESIZE_PNG_SCHEMA + "".join(
-        f", {c} {t}" for c, t in df.dtypes if c in passthrough
-    )
+    def row(d: dict) -> dict:
+        w, h, px = d["width"], d["height"], d["pixels"]
+        oh = max(1, (h * target_width) // w)
+        out = nearest_resample(px, w, h, target_width, oh)
+        return {
+            "width": w,
+            "height": h,
+            "out_width": target_width,
+            "out_height": oh,
+            "out_pixels": target_width * oh,
+            "out_pixel_sum": sum(out),
+            "pixel_md5": _md5(px),
+            "out_md5": _md5(out),
+        }
 
-    def _resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import png as _png
-
-        for pdf in batches:
-            n = len(pdf)
-            cols: dict[str, list] = {
-                k: [None] * n
-                for k in (
-                    "width",
-                    "height",
-                    "out_width",
-                    "out_height",
-                    "out_pixels",
-                    "out_pixel_sum",
-                    "pixel_md5",
-                    "out_md5",
-                )
-            }
-            for row, b in enumerate(pdf["payload"]):
-                if b is None:
-                    continue
-                d = _png.decode(bytes(b))
-                w, h, px = d["width"], d["height"], d["pixels"]
-                ow = target_width
-                oh = max(1, (h * target_width) // w)
-                out = nearest_resample(px, w, h, ow, oh)
-                cols["width"][row] = w
-                cols["height"][row] = h
-                cols["out_width"][row] = ow
-                cols["out_height"][row] = oh
-                cols["out_pixels"][row] = ow * oh
-                cols["out_pixel_sum"][row] = sum(out)
-                cols["pixel_md5"][row] = hashlib.md5(px).hexdigest()
-                cols["out_md5"][row] = hashlib.md5(out).hexdigest()
-            res = {"doc_id": pdf[id_col].to_numpy()}
-            for k in ("width", "height", "out_width", "out_height"):
-                res[k] = pd.Series(cols[k], index=pdf.index, dtype="Int32")
-            for k in ("out_pixels", "out_pixel_sum"):
-                res[k] = pd.Series(cols[k], index=pdf.index, dtype="Int64")
-            res["pixel_md5"] = cols["pixel_md5"]
-            res["out_md5"] = cols["out_md5"]
-            for c in passthrough:
-                res[c] = pdf[c]
-            yield pd.DataFrame(res)
-
-    return df.mapInPandas(_resample, schema)
+    return _map_rows(df, RESIZE_PNG_SCHEMA, _png.decode, row, id_col=id_col)
 
 
 #: decoded-WAV feature schema (decode_wav_features)
@@ -596,41 +568,28 @@ def synth_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     As with the PNG twin, the generation rule is pure integer arithmetic
     on the id, so a SQL oracle predicts the DECODED sample sum / peak /
     duration without being able to parse RIFF at all."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import wav as _wav
+    def make(i: int) -> tuple:
+        ch = 1 + (i // 2) % 2
+        sr = 8000 * (1 + i % 3)
+        bd = 8 + 8 * (i % 2)
+        nf = 16 + i % 33
+        samples = []
+        for j in range(nf * ch):
+            raw = (i * 37 + j * 101) % (1 << bd)
+            if bd == 16 and raw >= 32768:
+                raw -= 65536
+            samples.append(raw)
+        payload = _wav.encode(
+            samples,
+            ch,
+            sr,
+            bd,
+            extra_chunk=(b"LIST", b"INFO" + b"x" * (1 + i % 4)),
+        )
+        return payload, _wav.pack_samples(samples, bd)
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "source_md5": []}
-            for i in pdf[id_col]:
-                i = int(i)
-                ch = 1 + (i // 2) % 2
-                sr = 8000 * (1 + i % 3)
-                bd = 8 + 8 * (i % 2)
-                nf = 16 + i % 33
-                samples = []
-                for j in range(nf * ch):
-                    raw = (i * 37 + j * 101) % (1 << bd)
-                    if bd == 16 and raw >= 32768:
-                        raw -= 65536
-                    samples.append(raw)
-                pcm = _wav.pack_samples(samples, bd)
-                payload = _wav.encode(
-                    samples,
-                    ch,
-                    sr,
-                    bd,
-                    extra_chunk=(b"LIST", b"INFO" + b"x" * (1 + i % 4)),
-                )
-                out["doc_id"].append(i)
-                out["payload"].append(payload)
-                out["source_md5"].append(hashlib.md5(pcm).hexdigest())
-            yield pd.DataFrame(out)
-
-    return df.select(id_col).mapInPandas(
-        _synth, "doc_id bigint, payload binary, source_md5 string"
-    )
+    return _synth_payloads(df, id_col, make)
 
 
 def decode_wav_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -646,51 +605,19 @@ def decode_wav_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ``decode_features``/``decode_png_features``.  Extra input columns pass
     through so a generator stage can ship ground truth (``source_md5``)
     alongside."""
-    import hashlib
 
-    passthrough = [c for c in df.columns if c not in (id_col, "payload")]
-    schema = WAV_FEATURES_SCHEMA + "".join(
-        f", {c} {t}" for c, t in df.dtypes if c in passthrough
-    )
+    def row(d: dict) -> dict:
+        s = d["samples"]
+        return {
+            **d,
+            "n_samples": len(s),
+            "sample_sum": sum(s),
+            "abs_peak": max((abs(v) for v in s), default=0),
+            "duration_ms": d["n_frames"] * 1000 // d["sample_rate"],
+            "pcm_md5": _md5(d["data"]),
+        }
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import wav as _wav
-
-        int32 = ("sample_rate", "n_channels", "bit_depth", "abs_peak",
-                 "duration_ms")
-        int64 = ("n_frames", "n_samples", "sample_sum")
-        for pdf in batches:
-            n = len(pdf)
-            cols: dict[str, list] = {
-                k: [None] * n for k in (*int32, *int64, "pcm_md5")
-            }
-            for row, b in enumerate(pdf["payload"]):
-                if b is None:
-                    continue
-                d = _wav.decode(bytes(b))
-                s = d["samples"]
-                cols["sample_rate"][row] = d["sample_rate"]
-                cols["n_channels"][row] = d["n_channels"]
-                cols["bit_depth"][row] = d["bit_depth"]
-                cols["n_frames"][row] = d["n_frames"]
-                cols["n_samples"][row] = len(s)
-                cols["sample_sum"][row] = sum(s)
-                cols["abs_peak"][row] = max((abs(v) for v in s), default=0)
-                cols["duration_ms"][row] = (
-                    d["n_frames"] * 1000 // d["sample_rate"]
-                )
-                cols["pcm_md5"][row] = hashlib.md5(d["data"]).hexdigest()
-            out = {"doc_id": pdf[id_col].to_numpy()}
-            for k in int32:
-                out[k] = pd.Series(cols[k], index=pdf.index, dtype="Int32")
-            for k in int64:
-                out[k] = pd.Series(cols[k], index=pdf.index, dtype="Int64")
-            out["pcm_md5"] = cols["pcm_md5"]
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_decode, schema)
+    return _map_rows(df, WAV_FEATURES_SCHEMA, _wav.decode, row, id_col=id_col)
 
 
 #: extracted-GIF-frame schema (extract_gif_frames) — 1:N fan-out, one row
@@ -712,30 +639,16 @@ def synth_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     frame fan-out).  Emits (id, payload, source_md5) where source_md5
     digests ALL raw frames concatenated — the extraction stage must
     reproduce it bit-for-bit through LZW + sub-block framing."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import gif as _gif
+    def make(i: int) -> tuple:
+        w, h, nf = 3 + i % 5, 2 + i % 3, 2 + i % 4
+        frames = [
+            bytes((i * 31 + f * 17 + j) % 256 for j in range(w * h))
+            for f in range(nf)
+        ]
+        return _gif.encode(w, h, frames), b"".join(frames)
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "source_md5": []}
-            for i in pdf[id_col]:
-                i = int(i)
-                w, h, nf = 3 + i % 5, 2 + i % 3, 2 + i % 4
-                frames = [
-                    bytes((i * 31 + f * 17 + j) % 256 for j in range(w * h))
-                    for f in range(nf)
-                ]
-                out["doc_id"].append(i)
-                out["payload"].append(_gif.encode(w, h, frames))
-                out["source_md5"].append(
-                    hashlib.md5(b"".join(frames)).hexdigest()
-                )
-            yield pd.DataFrame(out)
-
-    return df.select(id_col).mapInPandas(
-        _synth, "doc_id bigint, payload binary, source_md5 string"
-    )
+    return _synth_payloads(df, id_col, make)
 
 
 def extract_gif_frames(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -756,61 +669,23 @@ def extract_gif_frames(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     per-row-bounded map work over Arrow batches — no shuffle, no driver
     traffic; the fan-out factor is the frame count, bounded by the
     container."""
-    import hashlib
 
-    passthrough = [c for c in df.columns if c not in (id_col, "payload")]
-    schema = GIF_FRAMES_SCHEMA + "".join(
-        f", {c} {t}" for c, t in df.dtypes if c in passthrough
-    )
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import gif as _gif
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id",
-                    "frame_idx",
-                    "width",
-                    "height",
-                    "n_frames",
-                    "pixel_sum",
-                    "frame_md5",
-                    "anim_md5",
-                    *passthrough,
-                )
+    def row(d: dict) -> list[dict]:
+        anim = _md5(b"".join(d["frames"]))
+        return [
+            {
+                **d,
+                "frame_idx": f,
+                "pixel_sum": sum(px),
+                "frame_md5": _md5(px),
+                "anim_md5": anim,
             }
-            for row in pdf.itertuples(index=False):
-                rd = row._asdict()
-                b = rd["payload"]
-                if b is None:
-                    continue
-                d = _gif.decode(bytes(b))
-                anim = hashlib.md5(b"".join(d["frames"])).hexdigest()
-                for f, px in enumerate(d["frames"]):
-                    out["doc_id"].append(rd[id_col])
-                    out["frame_idx"].append(f)
-                    out["width"].append(d["width"])
-                    out["height"].append(d["height"])
-                    out["n_frames"].append(d["n_frames"])
-                    out["pixel_sum"].append(sum(px))
-                    out["frame_md5"].append(hashlib.md5(px).hexdigest())
-                    out["anim_md5"].append(anim)
-                    for c in passthrough:
-                        out[c].append(rd[c])
-            pdf_out = pd.DataFrame(out)
-            for k, t in (
-                ("frame_idx", "Int32"),
-                ("width", "Int32"),
-                ("height", "Int32"),
-                ("n_frames", "Int32"),
-                ("pixel_sum", "Int64"),
-            ):
-                pdf_out[k] = pdf_out[k].astype(t)
-            yield pdf_out
+            for f, px in enumerate(d["frames"])
+        ]
 
-    return df.mapInPandas(_extract, schema)
+    return _map_rows(
+        df, GIF_FRAMES_SCHEMA, _gif.decode, row, id_col=id_col, fan_out=True
+    )
 
 
 def payload_digests(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -882,7 +757,6 @@ def fetch_payload_ranges(df: DataFrame, pointer_col: str = POINTER_FIELD) -> Dat
     shipping the bytes anywhere — swap the digest for the decode stage in
     a real pipeline. Partitioning discipline: repartition the pointer
     table by path upstream if many tasks would touch the same blobs."""
-    import hashlib
 
     def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -956,37 +830,23 @@ def synth_tone_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Emits (id, payload, source_md5) where source_md5 digests the raw PCM
     bytes, same contract as :func:`synth_wav_payloads`."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import wav as _wav
+    def make(i: int) -> tuple:
+        k = 1 + i % 31
+        amp = 10000 + (i % 7) * 1000
+        samples = [
+            amp if ((2 * k * j) // 64) % 2 == 0 else -amp for j in range(64)
+        ]
+        payload = _wav.encode(
+            samples,
+            1,
+            8000,
+            16,
+            extra_chunk=(b"LIST", b"INFOfft" + b"x" * (i % 2)),
+        )
+        return payload, _wav.pack_samples(samples, 16)
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "source_md5": []}
-            for i in pdf[id_col]:
-                i = int(i)
-                k = 1 + i % 31
-                amp = 10000 + (i % 7) * 1000
-                samples = [
-                    amp if ((2 * k * j) // 64) % 2 == 0 else -amp
-                    for j in range(64)
-                ]
-                pcm = _wav.pack_samples(samples, 16)
-                payload = _wav.encode(
-                    samples,
-                    1,
-                    8000,
-                    16,
-                    extra_chunk=(b"LIST", b"INFOfft" + b"x" * (i % 2)),
-                )
-                out["doc_id"].append(i)
-                out["payload"].append(payload)
-                out["source_md5"].append(hashlib.md5(pcm).hexdigest())
-            yield pd.DataFrame(out)
-
-    return df.select(id_col).mapInPandas(
-        _synth, "doc_id bigint, payload binary, source_md5 string"
-    )
+    return _synth_payloads(df, id_col, make)
 
 
 def spectral_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1011,61 +871,28 @@ def spectral_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     NULL payloads emit NULL features; extra input columns pass through
     (ground-truth digests).  Scale posture: per-row-bounded map work
     (64-point FFTs), no shuffle, no driver traffic."""
-    import hashlib
 
-    passthrough = [c for c in df.columns if c not in (id_col, "payload")]
-    schema = SPECTRAL_SCHEMA + "".join(
-        f", {c} {t}" for c, t in df.dtypes if c in passthrough
-    )
+    def row(d: dict) -> dict:
+        if d["n_channels"] != 1:
+            raise ValueError(
+                "spectral_features: declared domain is MONO audio; "
+                f"got {d['n_channels']} channels"
+            )
+        mag = np.abs(np.fft.rfft(np.asarray(d["samples"], dtype=np.float64)))
+        dom = 1 + int(np.argmax(mag[1:])) if len(mag) > 1 else 0
+        si = np.asarray(d["samples"], dtype=np.int64)
+        return {
+            **d,
+            "n_fft_bins": len(mag),
+            "dominant_bin": dom,
+            "dominant_hz": dom * d["sample_rate"] // d["n_frames"],
+            "energy": int((si * si).sum()),
+            "sample_sum": int(si.sum()),
+            "abs_peak": int(np.abs(si).max()) if len(si) else 0,
+            "pcm_md5": _md5(d["data"]),
+        }
 
-    def _spectral(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from sparkgraft.ext import wav as _wav
-
-        int32 = ("sample_rate", "n_fft_bins", "dominant_bin",
-                 "dominant_hz", "abs_peak")
-        int64 = ("n_frames", "energy", "sample_sum")
-        for pdf in batches:
-            n = len(pdf)
-            cols: dict[str, list] = {
-                k: [None] * n for k in (*int32, *int64, "pcm_md5")
-            }
-            for row, b in enumerate(pdf["payload"]):
-                if b is None:
-                    continue
-                d = _wav.decode(bytes(b))
-                if d["n_channels"] != 1:
-                    raise ValueError(
-                        "spectral_features: declared domain is MONO audio; "
-                        f"got {d['n_channels']} channels"
-                    )
-                s = np.asarray(d["samples"], dtype=np.float64)
-                mag = np.abs(np.fft.rfft(s))
-                cols["sample_rate"][row] = d["sample_rate"]
-                cols["n_frames"][row] = d["n_frames"]
-                cols["n_fft_bins"][row] = len(mag)
-                dom = 1 + int(np.argmax(mag[1:])) if len(mag) > 1 else 0
-                cols["dominant_bin"][row] = dom
-                cols["dominant_hz"][row] = (
-                    dom * d["sample_rate"] // d["n_frames"]
-                )
-                si = np.asarray(d["samples"], dtype=np.int64)
-                cols["energy"][row] = int((si * si).sum())
-                cols["sample_sum"][row] = int(si.sum())
-                cols["abs_peak"][row] = int(np.abs(si).max()) if len(si) else 0
-                cols["pcm_md5"][row] = hashlib.md5(d["data"]).hexdigest()
-            out = {"doc_id": pdf[id_col].to_numpy()}
-            for k in int32:
-                out[k] = pd.Series(cols[k], index=pdf.index, dtype="Int32")
-            for k in int64:
-                out[k] = pd.Series(cols[k], index=pdf.index, dtype="Int64")
-            out["pcm_md5"] = cols["pcm_md5"]
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_spectral, schema)
+    return _map_rows(df, SPECTRAL_SCHEMA, _wav.decode, row, id_col=id_col)
 
 
 #: decoded-JPEG feature schema (decode_jpeg_features)
@@ -1073,6 +900,36 @@ JPEG_FEATURES_SCHEMA = (
     "doc_id bigint, width int, height int, n_pixels bigint, "
     "pixel_sum bigint, pixel_md5 string"
 )
+
+
+def _fill_block(
+    planes: list[bytearray], w: int, bx: int, by: int, values: tuple[int, ...]
+) -> None:
+    """Set 8x8 block (bx, by) of each row-major plane (width ``w``) to its
+    constant value — the lossless class of the JPEG fixtures."""
+    for plane, v in zip(planes, values):
+        for y in range(by * 8, by * 8 + 8):
+            x0 = y * w + bx * 8
+            plane[x0 : x0 + 8] = bytes((v,)) * 8
+
+
+def _jpeg_gray_fixture(i: int) -> tuple[int, int, bytes]:
+    """``(width, height, pixels)`` of the grayscale fixture image shared by
+    :func:`synth_jpeg_payloads` and :func:`synth_jpeg_prog_payloads`."""
+    wb, hb = 1 + i % 3, 1 + i % 2
+    w, h = 8 * wb, 8 * hb
+    px = bytearray(w * h)
+    for by in range(hb):
+        for bx in range(wb):
+            v = 64 + 2 * ((i * 7 + bx * 3 + by * 5) % 64)
+            _fill_block([px], w, bx, by, (v,))
+    return w, h, bytes(px)
+
+
+def _count_rst(payload: bytes) -> int:
+    """RSTn marker pairs in a JPEG stream (0xFF 0xD0-0xD7 cannot occur in
+    stuffed entropy data, so the count is exact)."""
+    return sum(payload.count(bytes((0xFF, 0xD0 + n))) for n in range(8))
 
 
 def synth_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1088,33 +945,12 @@ def synth_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     Emits (id, payload, source_md5) with source_md5 digesting the
     pre-encode pixel bytes — the decoder must reproduce them exactly."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import jpeg as _jpeg
+    def make(i: int) -> tuple:
+        w, h, px = _jpeg_gray_fixture(i)
+        return _jpeg.encode_gray(w, h, px), px
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "source_md5": []}
-            for i in pdf[id_col]:
-                i = int(i)
-                wb, hb = 1 + i % 3, 1 + i % 2
-                w, h = 8 * wb, 8 * hb
-                px = bytearray(w * h)
-                for by in range(hb):
-                    for bx in range(wb):
-                        v = 64 + 2 * ((i * 7 + bx * 3 + by * 5) % 64)
-                        for y in range(8):
-                            row0 = (by * 8 + y) * w + bx * 8
-                            for x in range(8):
-                                px[row0 + x] = v
-                out["doc_id"].append(i)
-                out["payload"].append(_jpeg.encode_gray(w, h, bytes(px)))
-                out["source_md5"].append(hashlib.md5(bytes(px)).hexdigest())
-            yield pd.DataFrame(out)
-
-    return df.select(id_col).mapInPandas(
-        _synth, "doc_id bigint, payload binary, source_md5 string"
-    )
+    return _synth_payloads(df, id_col, make)
 
 
 #: the three deterministic progressive scan scripts the prog fixture
@@ -1147,51 +983,17 @@ def synth_jpeg_prog_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     structure was emitted, not silently folded to baseline — 0xFFDA
     cannot occur unstuffed in entropy data), ``n_rst`` the RSTn pairs
     (closed form: scans * floor((blocks-1)/interval))."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import jpeg as _jpeg
+    def make(i: int) -> tuple:
+        w, h, px = _jpeg_gray_fixture(i)
+        payload = _jpeg.encode_gray_progressive(
+            w, h, px,
+            scan_script=_PROG_SCRIPTS[i % 3] or _jpeg.PROGRESSIVE_SCRIPT,
+            restart_interval=i % 2,
+        )
+        return payload, px, payload.count(b"\xff\xda"), _count_rst(payload)
 
-        for pdf in batches:
-            out = {
-                "doc_id": [], "payload": [], "source_md5": [],
-                "n_scans": [], "n_rst": [],
-            }
-            for i in pdf[id_col]:
-                i = int(i)
-                wb, hb = 1 + i % 3, 1 + i % 2
-                w, h = 8 * wb, 8 * hb
-                px = bytearray(w * h)
-                for by in range(hb):
-                    for bx in range(wb):
-                        v = 64 + 2 * ((i * 7 + bx * 3 + by * 5) % 64)
-                        for y in range(8):
-                            row0 = (by * 8 + y) * w + bx * 8
-                            for x in range(8):
-                                px[row0 + x] = v
-                script = _PROG_SCRIPTS[i % 3] or _jpeg.PROGRESSIVE_SCRIPT
-                interval = i % 2
-                payload = _jpeg.encode_gray_progressive(
-                    w, h, bytes(px), scan_script=script,
-                    restart_interval=interval,
-                )
-                out["doc_id"].append(i)
-                out["payload"].append(payload)
-                out["source_md5"].append(hashlib.md5(bytes(px)).hexdigest())
-                out["n_scans"].append(payload.count(b"\xff\xda"))
-                out["n_rst"].append(
-                    sum(
-                        payload.count(bytes([0xFF, 0xD0 + n]))
-                        for n in range(8)
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return df.select(id_col).mapInPandas(
-        _synth,
-        "doc_id bigint, payload binary, source_md5 string, "
-        "n_scans bigint, n_rst bigint",
-    )
+    return _synth_payloads(df, id_col, make, counts=("n_scans", "n_rst"))
 
 
 def decode_jpeg_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1200,44 +1002,17 @@ def decode_jpeg_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     behind the standard Arrow-batched ``mapInPandas`` boundary — the DCT
     sibling of ``decode_png_features``.  NULL payloads emit NULL
     features; extra input columns pass through."""
-    import hashlib
 
-    passthrough = [c for c in df.columns if c not in (id_col, "payload")]
-    schema = JPEG_FEATURES_SCHEMA + "".join(
-        f", {c} {t}" for c, t in df.dtypes if c in passthrough
-    )
+    def row(d: dict) -> dict:
+        px = d["pixels"]
+        return {
+            **d,
+            "n_pixels": len(px),
+            "pixel_sum": sum(px),
+            "pixel_md5": _md5(px),
+        }
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import jpeg as _jpeg
-
-        for pdf in batches:
-            n = len(pdf)
-            cols: dict[str, list] = {
-                k: [None] * n
-                for k in ("width", "height", "n_pixels", "pixel_sum",
-                          "pixel_md5")
-            }
-            for row, b in enumerate(pdf["payload"]):
-                if b is None:
-                    continue
-                d = _jpeg.decode(bytes(b))
-                px = d["pixels"]
-                cols["width"][row] = d["width"]
-                cols["height"][row] = d["height"]
-                cols["n_pixels"][row] = len(px)
-                cols["pixel_sum"][row] = sum(px)
-                cols["pixel_md5"][row] = hashlib.md5(px).hexdigest()
-            out = {"doc_id": pdf[id_col].to_numpy()}
-            for k in ("width", "height"):
-                out[k] = pd.Series(cols[k], index=pdf.index, dtype="Int32")
-            for k in ("n_pixels", "pixel_sum"):
-                out[k] = pd.Series(cols[k], index=pdf.index, dtype="Int64")
-            out["pixel_md5"] = cols["pixel_md5"]
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_decode, schema)
+    return _map_rows(df, JPEG_FEATURES_SCHEMA, _jpeg.decode, row, id_col=id_col)
 
 
 #: decoded-color-JPEG feature schema (decode_jpeg_color_features)
@@ -1263,43 +1038,40 @@ def synth_jpeg_color_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFram
     fixed-point inverse transform of pure id arithmetic (SQL-stateable;
     ext/jpeg module docstring).  Emits (id, payload, source_md5) with
     source_md5 digesting the concatenated y||cb||cr source planes."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import jpeg as _jpeg
+    def make(i: int) -> tuple:
+        wb, hb = 1 + i % 3, 1 + i % 2
+        w, h = 8 * wb, 8 * hb
+        planes = [bytearray(w * h) for _ in range(3)]
+        for by in range(hb):
+            for bx in range(wb):
+                _fill_block(planes, w, bx, by, (
+                    64 + 2 * ((i * 7 + bx * 3 + by * 5) % 64),
+                    96 + 2 * ((i * 11 + bx * 5 + by * 7) % 32),
+                    96 + 2 * ((i * 13 + bx * 7 + by * 11) % 32),
+                ))
+        yp, cbp, crp = map(bytes, planes)
+        return _jpeg.encode_ycbcr(w, h, yp, cbp, crp), yp + cbp + crp
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "source_md5": []}
-            for i in pdf[id_col]:
-                i = int(i)
-                wb, hb = 1 + i % 3, 1 + i % 2
-                w, h = 8 * wb, 8 * hb
-                yp = bytearray(w * h)
-                cbp = bytearray(w * h)
-                crp = bytearray(w * h)
-                for by in range(hb):
-                    for bx in range(wb):
-                        yv = 64 + 2 * ((i * 7 + bx * 3 + by * 5) % 64)
-                        cbv = 96 + 2 * ((i * 11 + bx * 5 + by * 7) % 32)
-                        crv = 96 + 2 * ((i * 13 + bx * 7 + by * 11) % 32)
-                        for y in range(8):
-                            row0 = (by * 8 + y) * w + bx * 8
-                            for x in range(8):
-                                yp[row0 + x] = yv
-                                cbp[row0 + x] = cbv
-                                crp[row0 + x] = crv
-                out["doc_id"].append(i)
-                out["payload"].append(
-                    _jpeg.encode_ycbcr(w, h, bytes(yp), bytes(cbp), bytes(crp))
-                )
-                out["source_md5"].append(
-                    hashlib.md5(bytes(yp) + bytes(cbp) + bytes(crp)).hexdigest()
-                )
-            yield pd.DataFrame(out)
+    return _synth_payloads(df, id_col, make)
 
-    return df.select(id_col).mapInPandas(
-        _synth, "doc_id bigint, payload binary, source_md5 string"
-    )
+
+def _ycbcr_420_fixture(i: int, mw: int, mh: int) -> tuple[int, int, list[bytes]]:
+    """The 4:2:0 fixture planes (y, cb, cr) of ``mw x mh`` 16x16 MCUs:
+    luma constant per 8x8 block (gx, gy), chroma per MCU (mx, my) — see
+    :func:`synth_jpeg_rst_payloads`; the one-MCU-row 420 fixture is its
+    ``my = 0`` case."""
+    w, h = 16 * mw, 16 * mh
+    planes = [bytearray(w * h) for _ in range(3)]
+    for my in range(mh):
+        for mx in range(mw):
+            cbv = 96 + 2 * ((i * 11 + mx * 5 + my * 7) % 32)
+            crv = 96 + 2 * ((i * 13 + mx * 7 + my * 3) % 32)
+            for gy in (2 * my, 2 * my + 1):
+                for gx in (2 * mx, 2 * mx + 1):
+                    yv = 64 + 2 * ((i * 7 + gx * 3 + gy * 5) % 64)
+                    _fill_block(planes, w, gx, gy, (yv, cbv, crv))
+    return w, h, [bytes(p) for p in planes]
 
 
 def synth_jpeg_420_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1318,47 +1090,12 @@ def synth_jpeg_420_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     subsampled pipeline is lossless on this class and the oracle stays
     pure id arithmetic.  Emits (id, payload, source_md5) digesting the
     full-resolution y||cb||cr source planes."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import jpeg as _jpeg
+    def make(i: int) -> tuple:
+        w, h, planes = _ycbcr_420_fixture(i, 1 + i % 2, 1)
+        return _jpeg.encode_ycbcr_420(w, h, *planes), b"".join(planes)
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "source_md5": []}
-            for i in pdf[id_col]:
-                i = int(i)
-                mw = 1 + i % 2
-                w, h = 16 * mw, 16
-                yp = bytearray(w * h)
-                cbp = bytearray(w * h)
-                crp = bytearray(w * h)
-                for mx in range(mw):
-                    cbv = 96 + 2 * ((i * 11 + mx * 5) % 32)
-                    crv = 96 + 2 * ((i * 13 + mx * 7) % 32)
-                    for by in range(2):
-                        for bx in range(2):
-                            gx = mx * 2 + bx
-                            yv = 64 + 2 * ((i * 7 + gx * 3 + by * 5) % 64)
-                            for y in range(8):
-                                row0 = (by * 8 + y) * w + gx * 8
-                                for x in range(8):
-                                    yp[row0 + x] = yv
-                                    cbp[row0 + x] = cbv
-                                    crp[row0 + x] = crv
-                out["doc_id"].append(i)
-                out["payload"].append(
-                    _jpeg.encode_ycbcr_420(
-                        w, h, bytes(yp), bytes(cbp), bytes(crp)
-                    )
-                )
-                out["source_md5"].append(
-                    hashlib.md5(bytes(yp) + bytes(cbp) + bytes(crp)).hexdigest()
-                )
-            yield pd.DataFrame(out)
-
-    return df.select(id_col).mapInPandas(
-        _synth, "doc_id bigint, payload binary, source_md5 string"
-    )
+    return _synth_payloads(df, id_col, make)
 
 
 def synth_jpeg_rst_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1380,55 +1117,15 @@ def synth_jpeg_rst_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     0xD0-0xD7 cannot occur in stuffed entropy data, so the count is
     exact) — the oracle predicts it as ``floor((mcus - 1) / interval)``,
     certifying the markers were genuinely emitted, not skipped."""
-    import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import jpeg as _jpeg
+    def make(i: int) -> tuple:
+        w, h, planes = _ycbcr_420_fixture(i, 1 + i % 3, 2)
+        payload = _jpeg.encode_ycbcr_420(
+            w, h, *planes, restart_interval=1 + i % 2
+        )
+        return payload, b"".join(planes), _count_rst(payload)
 
-        for pdf in batches:
-            out = {"doc_id": [], "payload": [], "source_md5": [], "n_rst": []}
-            for i in pdf[id_col]:
-                i = int(i)
-                mw = 1 + i % 3
-                interval = 1 + i % 2
-                w, h = 16 * mw, 32
-                yp = bytearray(w * h)
-                cbp = bytearray(w * h)
-                crp = bytearray(w * h)
-                for my in range(2):
-                    for mx in range(mw):
-                        cbv = 96 + 2 * ((i * 11 + mx * 5 + my * 7) % 32)
-                        crv = 96 + 2 * ((i * 13 + mx * 7 + my * 3) % 32)
-                        for by in range(2):
-                            for bx in range(2):
-                                gx, gy = mx * 2 + bx, my * 2 + by
-                                yv = 64 + 2 * ((i * 7 + gx * 3 + gy * 5) % 64)
-                                for y in range(8):
-                                    row0 = (gy * 8 + y) * w + gx * 8
-                                    for x in range(8):
-                                        yp[row0 + x] = yv
-                                        cbp[row0 + x] = cbv
-                                        crp[row0 + x] = crv
-                payload = _jpeg.encode_ycbcr_420(
-                    w, h, bytes(yp), bytes(cbp), bytes(crp),
-                    restart_interval=interval,
-                )
-                out["doc_id"].append(i)
-                out["payload"].append(payload)
-                out["source_md5"].append(
-                    hashlib.md5(bytes(yp) + bytes(cbp) + bytes(crp)).hexdigest()
-                )
-                out["n_rst"].append(
-                    sum(
-                        payload.count(bytes([0xFF, 0xD0 + n]))
-                        for n in range(8)
-                    )
-                )
-            yield pd.DataFrame(out)
-
-    return df.select(id_col).mapInPandas(
-        _synth, "doc_id bigint, payload binary, source_md5 string, n_rst bigint"
-    )
+    return _synth_payloads(df, id_col, make, counts=("n_rst",))
 
 
 def decode_jpeg_color_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1437,49 +1134,23 @@ def decode_jpeg_color_features(df: DataFrame, id_col: str = "doc_id") -> DataFra
     y||cb||cr planes — same Arrow-batched ``mapInPandas`` boundary as
     every other media stage.  NULL payloads emit NULL features; extra
     input columns pass through."""
-    import hashlib
 
-    passthrough = [c for c in df.columns if c not in (id_col, "payload")]
-    schema = JPEG_COLOR_FEATURES_SCHEMA + "".join(
-        f", {c} {t}" for c, t in df.dtypes if c in passthrough
+    def row(d: dict) -> dict:
+        if d["n_components"] != 3:
+            raise ValueError("jpeg: expected a color scan")
+        rgb = d["rgb"]
+        return {
+            **d,
+            "n_pixels": d["width"] * d["height"],
+            "y_sum": sum(d["y"]),
+            "cb_sum": sum(d["cb"]),
+            "cr_sum": sum(d["cr"]),
+            "r_sum": sum(rgb[0::3]),
+            "g_sum": sum(rgb[1::3]),
+            "b_sum": sum(rgb[2::3]),
+            "pixel_md5": _md5(d["y"] + d["cb"] + d["cr"]),
+        }
+
+    return _map_rows(
+        df, JPEG_COLOR_FEATURES_SCHEMA, _jpeg.decode, row, id_col=id_col
     )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sparkgraft.ext import jpeg as _jpeg
-
-        keys = ("width", "height", "n_pixels", "y_sum", "cb_sum",
-                "cr_sum", "r_sum", "g_sum", "b_sum", "pixel_md5")
-        for pdf in batches:
-            n = len(pdf)
-            cols: dict[str, list] = {k: [None] * n for k in keys}
-            for row, b in enumerate(pdf["payload"]):
-                if b is None:
-                    continue
-                d = _jpeg.decode(bytes(b))
-                if d["n_components"] != 3:
-                    raise ValueError("jpeg: expected a color scan")
-                rgb = d["rgb"]
-                cols["width"][row] = d["width"]
-                cols["height"][row] = d["height"]
-                cols["n_pixels"][row] = d["width"] * d["height"]
-                cols["y_sum"][row] = sum(d["y"])
-                cols["cb_sum"][row] = sum(d["cb"])
-                cols["cr_sum"][row] = sum(d["cr"])
-                cols["r_sum"][row] = sum(rgb[0::3])
-                cols["g_sum"][row] = sum(rgb[1::3])
-                cols["b_sum"][row] = sum(rgb[2::3])
-                cols["pixel_md5"][row] = hashlib.md5(
-                    d["y"] + d["cb"] + d["cr"]
-                ).hexdigest()
-            out = {"doc_id": pdf[id_col].to_numpy()}
-            for k in ("width", "height"):
-                out[k] = pd.Series(cols[k], index=pdf.index, dtype="Int32")
-            for k in ("n_pixels", "y_sum", "cb_sum", "cr_sum",
-                      "r_sum", "g_sum", "b_sum"):
-                out[k] = pd.Series(cols[k], index=pdf.index, dtype="Int64")
-            out["pixel_md5"] = cols["pixel_md5"]
-            for c in passthrough:
-                out[c] = pdf[c]
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(_decode, schema)

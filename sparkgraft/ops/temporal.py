@@ -1,4 +1,5 @@
-"""Temporal scalar ops (reference §2.8 F1-F6 equivalents).
+"""Temporal scalar ops (reference §2.8 F2, F3 and F5 equivalents; F1
+parsing is ``F.to_timestamp`` with ``RAW_TS_FORMAT`` in the ETL).
 
 All built-in JVM functions — no Python in the hot path.
 """
@@ -9,11 +10,6 @@ from pyspark.sql import Column, functions as F
 
 #: the reference's raw-CSV timestamp format (DataLoadTransformer.scala:47)
 RAW_TS_FORMAT = "yyyy-MM-dd HH:mm:ss 'UTC'"
-
-
-def parse_utc_text(col: Column | str, fmt: str = RAW_TS_FORMAT) -> Column:
-    """Text timestamp -> TimestampType (F1)."""
-    return F.to_timestamp(col, fmt)
 
 
 def utc_to_tz(col: Column | str, tz: str = "Asia/Seoul") -> Column:
@@ -37,15 +33,3 @@ def local_date(col: Column | str, tz: str = "Asia/Seoul") -> Column:
 def week_start(col: Column | str) -> Column:
     """Monday-start week bucket as DATE (F5: DATE_TRUNC('WEEK', …))."""
     return F.date_trunc("week", F.col(col) if isinstance(col, str) else col).cast("date")
-
-
-def epoch_seconds(col: Column | str) -> Column:
-    """Timestamp -> epoch seconds (F4: unix_timestamp)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_timestamp(c.cast("timestamp"))
-
-
-def epoch_micros(col: Column | str) -> Column:
-    """Timestamp -> epoch microseconds (full precision for ns-derived data)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_micros(c.cast("timestamp"))

@@ -814,3 +814,34 @@ def test_unordered_lane_has_no_presentation_sort(spark, sf_dir, name):
     assert not re.search(r"\bSort \[[^\]]*\], true", plan), plan
     assert "rangepartitioning" not in plan, plan
     assert "ExistingRDD" not in plan, plan
+
+
+#: codec lanes -> Exchange count of the executed plan (read from the plans
+#: at sf0.001): 1 where the lane repartitions its doc ids across the
+#: default parallelism before the generator, 0 where it does not
+_CODEC_LANE_EXCHANGES = {
+    "multimodal_decode_png": 0,
+    "multimodal_decode_png_palette": 1,
+    "multimodal_decode_png_adam7": 1,
+    "multimodal_decode_wav": 0,
+    "multimodal_resize_real": 0,
+    "multimodal_frames_gif": 1,
+    "multimodal_audio_fft": 0,
+    "multimodal_decode_jpeg": 1,
+    "multimodal_decode_jpeg_color": 1,
+    "multimodal_decode_jpeg_420": 1,
+    "multimodal_decode_jpeg_rst": 1,
+    "multimodal_decode_jpeg_prog": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CODEC_LANE_EXCHANGES))
+def test_codec_lane_python_boundary_shape(spark, sf_dir, name):
+    """Each codec lane crosses the Python boundary exactly twice — one
+    ``MapInPandas`` for the fixture generator, one for the decode/feature
+    stage (both through ``ext.multimodal._map_rows``) — and keeps its
+    exchange count, so the shared row-map helper can add neither a
+    Python round trip nor a shuffle."""
+    plan = _plan(spark, sf_dir, name)
+    assert plan.count("MapInPandas") == 2, plan
+    assert plan.count("Exchange ") == _CODEC_LANE_EXCHANGES[name], plan
