@@ -487,8 +487,9 @@ def quality_funnel(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Stage-by-stage survivor counts for the standard curation funnel:
-    raw → language filter → length filter → exact-dedup. One row per stage,
-    ordered — the accounting table every corpus build publishes.
+    raw → language filter → length filter → exact-dedup. One row per stage
+    (the ``stage`` labels sort in funnel order) — the accounting table
+    every corpus build publishes.
 
     Each stage is a refinement of the previous (counts are monotone
     non-increasing). ONE pass over the corpus: conditional counts + one
@@ -513,7 +514,6 @@ def quality_funnel(
                 "stack(4, '0_raw', s0, '1_lang', s1, '2_minlen', s2, '3_dedup', s3)"
             ).alias("stage", "n_docs")
         )
-        .orderBy("stage")
     )
 
 
@@ -552,7 +552,6 @@ def source_datacard(
             F.round(1 - F.col("n_distinct_texts") / F.col("n_docs"), 6).alias("dup_rate"),
             F.expr("CAST((n_docs * 1000000) DIV total_docs AS BIGINT)").alias("share_ppm"),
         )
-        .orderBy(source_col)
     )
 
 
@@ -665,8 +664,7 @@ def exact_dup_spans(
         .select(id_col, (F.col("pos0") + 1).alias("pos"), "h")
         # both the corpus-wide frequency pass and the join back read this
         # relation — materialize it once instead of re-running the
-        # tokenize+md5+rolling-hash map per consumer (and a third time in
-        # the terminal sort's sampling pass)
+        # tokenize+md5+rolling-hash map per consumer
         .localCheckpoint(eager=True)
     )
     freq = spans.groupBy("h").agg(F.count(F.lit(1)).alias("c")).where(F.col("c") >= min_count)
@@ -696,7 +694,6 @@ def exact_dup_spans(
                 6,
             ).alias("dup_fraction"),
         )
-        .orderBy(id_col)
     )
 
 
@@ -725,4 +722,4 @@ def shard_assign(
         id_col,
         "n_tokens",
         ((F.col("__rn") - 1) % k).cast("bigint").alias("shard"),
-    ).orderBy(id_col)
+    )

@@ -1147,11 +1147,7 @@ def incremental_bloom_dedup(
     # Bloom false positives — carry their text into the exact verify join
     cand_h = candidates.select("__h").distinct()
     hist_pruned = hist.join(cand_h, "__h", "left_semi")
-    return (
-        candidates.join(hist_pruned, ["__h", "__t"], "left_semi")
-        .select(id_col)
-        .orderBy(id_col)
-    )
+    return candidates.join(hist_pruned, ["__h", "__t"], "left_semi").select(id_col)
 
 
 def incremental_minhash_pairs(

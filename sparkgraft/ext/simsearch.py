@@ -714,10 +714,8 @@ def kmeans_assign(
     q = _quantize_micro(emb, id_col, vec_col)
     if centroids is not None:
         _check_centroid_shape(centroids, k, dim, "kmeans_assign")
-        return (
-            _kmeans_assigned(q, centroids, id_col)
-            .select(id_col, "cluster", "sq_dist")
-            .orderBy(id_col)
+        return _kmeans_assigned(q, centroids, id_col).select(
+            id_col, "cluster", "sq_dist"
         )
     # persisted for the fitting iterations' collects; the returned
     # assignment DataFrame is lazy and recomputes q from lineage after the
@@ -725,11 +723,7 @@ def kmeans_assign(
     q = q.persist()
     try:
         cents = _kmeans_fit_on_q(q, k, iters, id_col, dim)
-        return (
-            _kmeans_assigned(q, cents, id_col)
-            .select(id_col, "cluster", "sq_dist")
-            .orderBy(id_col)
-        )
+        return _kmeans_assigned(q, cents, id_col).select(id_col, "cluster", "sq_dist")
     finally:
         q.unpersist()
 
@@ -1012,9 +1006,7 @@ def _pca_body(q, n, iters, id_col, dim):
         f"aggregate(zip_with(zip_with(qv, array({mean_lit}), (x, mu) -> x - mu),"
         f" array({v_lit}), (c, vv) -> c * vv), CAST(0 AS BIGINT), (acc, t) -> acc + t)"
     )
-    return q.select(
-        id_col, F.expr(proj).alias("pc1_proj")
-    ).orderBy(id_col)
+    return q.select(id_col, F.expr(proj).alias("pc1_proj"))
 
 
 def _pq_sq_expr(arr_expr: str, c: list[int]) -> str:
@@ -1232,7 +1224,6 @@ def pq_topk(
             part.select("qid", "cid", "approx_sq_dist")
             .withColumn("rank", F.row_number().over(w2))
             .where(F.col("rank") <= topk)
-            .orderBy("qid", "rank")
         )
     finally:
         q.unpersist()

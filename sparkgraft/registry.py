@@ -15,7 +15,8 @@ sort belongs in a lane only where it feeds LIMIT, top-k or rank semantics,
 or where it reproduces a reference or TPC-H ``ORDER BY`` (queries/wau.py,
 queries/tpch.py); a terminal sort that feeds nothing is cost without
 meaning (a sampling job plus a range exchange).  Oracle SQL may keep its
-``ORDER BY`` for readability.
+``ORDER BY`` for readability.  ``ext`` operators follow the same rule:
+their output is unordered unless they implement top-k or LIMIT.
 
 Registry sections map to SURVEY.md §2 rows (cited per query).
 """
@@ -174,7 +175,6 @@ def q_wau_user_twolevel(spark, sf_dir):
     return (
         pairs.groupBy("event_week")
         .agg(F.count(F.lit(1)).alias("wau"))
-        .orderBy("event_week")
     )
 
 
@@ -349,7 +349,6 @@ def q_case_when_buckets(spark, sf_dir):
         ev.select("event_type", bucket)
         .groupBy("event_type", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("event_type", "bucket")
     )
 
 
@@ -372,7 +371,6 @@ def q_kst_daily_counts(spark, sf_dir):
         ev.select(local_date("ts").alias("event_date_kst"))
         .groupBy("event_date_kst")
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .orderBy("event_date_kst")
     )
 
 
@@ -641,7 +639,6 @@ def q_sessions_per_user_window(spark, sf_dir):
     return (
         per_session.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_sessions"))
-        .orderBy("user_id")
     )
 
 
@@ -782,7 +779,6 @@ def q_tumbling_15min_counts(spark, sf_dir):
             "n_events",
             "n_users",
         )
-        .orderBy("window_start")
     )
 
 
@@ -1148,7 +1144,6 @@ def q_percentile_value_by_type(spark, sf_dir):
             F.round(F.col("__ps")[0], 6).alias("p50"),
             F.round(F.col("__ps")[1], 6).alias("p90"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1305,7 +1300,7 @@ def q_pivot_daily_event_types(spark, sf_dir):
     return piv.select(
         "event_date_kst",
         *[F.coalesce(F.col(t), F.lit(0)).alias(t) for t in _EVENT_TYPES],
-    ).orderBy("event_date_kst")
+    )
 
 
 @register(
@@ -1371,7 +1366,6 @@ def q_salted_join_user_events(spark, sf_dir):
     return (
         salted_join(ev, totals, "user_id", n_salts=16, salt_source="event_id")
         .select("event_id", "user_id", "n_events")
-        .orderBy("event_id")
     )
 
 
@@ -1408,7 +1402,6 @@ def q_salted_join_auto(spark, sf_dir):
     return (
         salted_join_auto(ev, totals, "user_id", n_salts=16, salt_source="event_id")
         .select("event_id", "user_id", "n_events")
-        .orderBy("event_id")
     )
 
 
@@ -1483,7 +1476,6 @@ def q_wau_sketch_weekly(spark, sf_dir):
                 <= 0.05 * F.col("wau_exact")
             ).alias("sketch_within_5pct"),
         )
-        .orderBy("event_week")
     )
 
 
@@ -1773,7 +1765,6 @@ def q_wau_wow_growth(spark, sf_dir):
             "wow_growth",
             F.round((F.col("wau") - prev) / prev.cast("double"), 6),
         )
-        .orderBy("event_week")
     )
 
 
@@ -1817,7 +1808,6 @@ def q_retention_cohorts(spark, sf_dir):
             .alias("week_number"),
         )
         .agg(F.countDistinct("user_id").alias("n_users"))
-        .orderBy("cohort_week", "week_number")
     )
 
 
@@ -1861,7 +1851,6 @@ def q_event_transition_matrix(spark, sf_dir):
         cnt.withColumn(
             "p", F.round(F.col("n") / F.sum("n").over(w_norm).cast("double"), 6)
         )
-        .orderBy("event_type", "next_type")
     )
 
 
@@ -1907,7 +1896,6 @@ def q_value_zscore_outliers(spark, sf_dir):
         ev.join(F.broadcast(stats), "event_type")
         .where(F.abs(z) > 3)
         .select("event_id", "event_type", "value", F.round(z, 6).alias("z"))
-        .orderBy("event_id")
     )
 
 
@@ -1948,7 +1936,6 @@ def q_session_window_stats(spark, sf_dir):
             F.col("session_window.end").cast("timestamp_ntz").alias("session_end"),
             "n_events",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -1988,7 +1975,6 @@ def q_unpivot_lineitem_measures(spark, sf_dir):
     return (
         long.groupBy("measure")
         .agg(F.count("*").alias("n"), exact_sum("value").alias("total"))
-        .orderBy("measure")
     )
 
 
@@ -2041,7 +2027,6 @@ def q_custom_source_jsonl(spark, sf_dir):
     return (
         df.groupBy("source")
         .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
-        .orderBy("source")
     )
 
 
@@ -2083,7 +2068,6 @@ def q_custom_sink_jsonl_roundtrip(spark, sf_dir):
     return (
         back.groupBy("lang")
         .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
-        .orderBy("lang")
     )
 
 
@@ -2161,7 +2145,6 @@ def q_streaming_stream_join(spark, sf_dir):
             F.col("view_ts").cast("timestamp_ntz").alias("view_ts"),
             F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
         )
-        .orderBy("view_id", "purchase_id")
     )
 
 
@@ -2204,7 +2187,6 @@ def q_streaming_static_enrich(spark, sf_dir):
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
         )
-        .orderBy("segment")
     )
 
 
@@ -2246,7 +2228,6 @@ def q_streaming_replay_dedup(spark, sf_dir):
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -2331,7 +2312,6 @@ def q_streaming_windowed_counts(spark, sf_dir):
             "n_events",
             "n_purchases",
         )
-        .orderBy("window_start")
     )
 
 
@@ -2451,7 +2431,7 @@ def q_value_quantiles_approx(spark, sf_dir):
         ((F.col("ap")[2] >= F.col("pb")[4]) & (F.col("ap")[2] <= F.col("mx"))).alias(
             "p99_ok"
         ),
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -2514,7 +2494,6 @@ def q_session_window_dynamic_gap(spark, sf_dir):
             F.col("w.end").cast("timestamp_ntz").alias("session_end"),
             "n_events",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -2577,7 +2556,6 @@ def q_value_histogram(spark, sf_dir):
             F.round(F.col("mn") + F.col("bin") * w, 6).alias("bin_lo"),
             F.round(F.col("mn") + (F.col("bin") + 1) * w, 6).alias("bin_hi"),
         )
-        .orderBy("event_type", "bin")
     )
 
 
@@ -2639,7 +2617,7 @@ def q_value_time_correlation(spark, sf_dir):
     )
     return mo.select(
         "event_type", "n", F.round(r, 6).alias("corr_time_of_day")
-    ).orderBy("event_type")
+    )
 
 
 @register(
@@ -2677,7 +2655,6 @@ def q_props_map_stats(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             F.sum("val").cast("bigint").alias("sum_val"),
         )
-        .orderBy("event_type", "key")
     )
 
 
@@ -2777,7 +2754,7 @@ def q_asof_nearest_signup(spark, sf_dir):
         "ts",
         nearest.alias("nearest_signup_ts"),
         gap.cast("bigint").alias("gap_us"),
-    ).orderBy("event_id")
+    )
 
 
 @register(
@@ -2894,7 +2871,7 @@ def q_dq_constraint_report(spark, sf_dir):
         .union(_row("lineitem_qty_range", qty_check))
         .union(_row("orders_pk_unique", orders_check))
     )
-    return report.orderBy("check_name")
+    return report
 
 
 @register(
@@ -2936,7 +2913,6 @@ def q_dq_gated_value_rollup(spark, sf_dir):
             F.count("value").alias("n_values"),
             exact_sum("value").alias("sum_value"),
         )
-        .orderBy("event_type", "event_day")
     )
 
 
@@ -2979,7 +2955,6 @@ def q_pseudonymous_join(spark, sf_dir):
         ev.join(cust, ev.user_pseudo == cust.cust_pseudo)
         .groupBy(F.col("c_mktsegment").alias("segment"))
         .agg(F.count("*").alias("n_events"))
-        .orderBy("segment")
     )
 
 
@@ -3010,7 +2985,6 @@ def q_k_anonymity_audit(spark, sf_dir):
         cust.groupBy("c_nationkey", "c_mktsegment")
         .agg(F.count("*").alias("n"))
         .where(F.col("n") < 10)
-        .orderBy("c_nationkey", "c_mktsegment")
     )
 
 
@@ -3068,7 +3042,7 @@ def q_incremental_view_merge(spark, sf_dir):
         F.least(F.col("b.mn"), F.col("d.mn")).alias("min_value"),
         F.greatest(F.col("b.mx"), F.col("d.mx")).alias("max_value"),
     )
-    return merged.orderBy("event_date")
+    return merged
 
 
 @register(
@@ -3145,7 +3119,6 @@ def q_value_decile_bins(spark, sf_dir):
             (F.round(F.min("value"), 6) + F.lit(0.0)).alias("lo"),
             (F.round(F.max("value"), 6) + F.lit(0.0)).alias("hi"),
         )
-        .orderBy("event_type", "decile")
     )
 
 
@@ -3206,7 +3179,7 @@ def q_gdpr_erasure_report(spark, sf_dir):
         .union(_count("orders_rows_erased", orders, "o_custkey", "left_semi"))
         .union(_count("events_rows_retained", ev, "user_id", "left_anti"))
     )
-    return report.orderBy("item")
+    return report
 
 
 @register(
@@ -3249,7 +3222,6 @@ def q_rolling_7d_active_users(spark, sf_dir):
         contrib.join(F.broadcast(mx), F.col("day") <= F.col("mx"))
         .groupBy("day")
         .agg(F.count_distinct("user_id").alias("active_7d"))
-        .orderBy("day")
     )
 
 
@@ -3391,7 +3363,6 @@ def q_attribution_linear(spark, sf_dir):
             F.count_distinct("conv_id").alias("conversions_touched"),
             (F.sum("w_ppm").cast("bigint") / F.lit(1000000.0)).alias("credit"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -3619,7 +3590,6 @@ def q_timeseries_gapfill(spark, sf_dir):
             F.coalesce("n", F.lit(0)).cast("bigint").alias("n_events"),
             F.last("mx_v", ignorenulls=True).over(w).alias("last_seen_peak"),
         )
-        .orderBy("user_id", "day")
     )
 
 
@@ -3882,9 +3852,7 @@ def q_etl_user_activity_roundtrip(spark, sf_dir):
             pass  # session already stopped at interpreter exit
 
     atexit.register(_drop_etl_table)
-    return catalog.read_table(spark, spec).orderBy(
-        "user_id", "event_ts_utc", "event_type", "product_id"
-    )
+    return catalog.read_table(spark, spec)
 
 
 # extension operators (dedup / simsearch / text / multimodal) and the wider
@@ -3948,7 +3916,6 @@ def q_value_median_exact(spark, sf_dir):
             F.round(F.avg("value"), 6).alias("median_value"),
             F.max("__n").cast("bigint").alias("n"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -4019,11 +3986,7 @@ def q_streaming_session_window(spark, sf_dir):
         )
     )
     run_stream_once(agg, work)
-    return (
-        spark.read.parquet(out)
-        .where(F.col("user_id") >= 0)
-        .orderBy("user_id", "session_start")
-    )
+    return spark.read.parquet(out).where(F.col("user_id") >= 0)
 
 
 @register(
@@ -4057,8 +4020,7 @@ def q_streaming_state_inspect(spark, sf_dir):
     pins the dual: un-evicted state is lossless and externally readable.
 
     Scale: the state reader is a parquet-like scan of the HDFS state
-    store (one partition per shuffle partition) — no replay, no shuffle
-    beyond the final sort.
+    store (one partition per shuffle partition) — no replay, no shuffle.
     """
 
     work = scratch_dir("sparkgraft_stinsp_")
@@ -4101,7 +4063,7 @@ def q_streaming_state_inspect(spark, sf_dir):
         # the state VALUE schema carries the aggregation buffer's internal
         # field name ("count"), not the query alias
         F.col("value.count").alias("n"),
-    ).orderBy("window_start", "event_type")
+    )
 
 
 @register(
@@ -4174,7 +4136,6 @@ def q_custom_stream_jsonl_counts(spark, sf_dir):
         spark.read.parquet(out)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("event_type")
     )
 
 
@@ -4250,7 +4211,7 @@ def q_scd2_point_in_time_lookup(spark, sf_dir):
         "ts",
         F.col("v_type").alias("type_asof_1h_ago"),
         F.col("effective_from").alias("version_from"),
-    ).orderBy("event_id")
+    )
 
 
 # ONE template for the recursive-hierarchy SQL, formatted with real view
@@ -4273,15 +4234,15 @@ _RECURSIVE_HIERARCHY_TPL = """
       SELECT e.ckind, CAST(e.cid AS BIGINT), concat(w.path, '/', e.cname),
              w.lvl + 1
       FROM walk w JOIN edges e ON e.pkind = w.kind AND e.pid = w.id)
-    SELECT kind, id, path, lvl FROM walk ORDER BY kind, id
-"""
+    SELECT kind, id, path, lvl FROM walk"""
 
 
 @register(
     "recursive_cte_hierarchy",
     _RECURSIVE_HIERARCHY_TPL.format(
         region="region", nation="nation", customer="customer"
-    ),
+    )
+    + " ORDER BY kind, id\n",
 )
 def q_recursive_cte_hierarchy(spark, sf_dir):
     """Recursive CTE (Spark 4 WITH RECURSIVE) materializing the
@@ -4341,7 +4302,7 @@ def q_sql_udf_value_buckets(spark, sf_dir):
     return spark.sql(
         """
         SELECT sparkgraft_bucket(value) AS bucket, count(*) AS n
-        FROM __squ_events GROUP BY 1 ORDER BY bucket
+        FROM __squ_events GROUP BY 1
         """
     )
 
@@ -4561,7 +4522,6 @@ def q_time_weighted_avg_value(spark, sf_dir):
                 / F.sum("dur").cast("double")
             ).alias("twa_value"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -4660,7 +4620,6 @@ def q_column_profile_lineitem(spark, sf_dir):
         .unionAll(num("l_discount"))
         .unionAll(txt("l_returnflag"))
         .unionAll(dat("l_shipdate"))
-        .orderBy("col_name")
     )
 
 
@@ -4735,7 +4694,6 @@ def q_ewma_user_value(spark, sf_dir):
                 / F.lit(100.0)
             ).alias("ewma_value"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -4838,7 +4796,6 @@ def q_snapshot_diff_orders(spark, sf_dir):
         )
         .groupBy("change_type")
         .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy("change_type")
     )
 
 
@@ -4922,7 +4879,6 @@ def q_zorder_layout_audit(spark, sf_dir):
             F.min("day_idx").alias("min_day"),
             F.max("day_idx").alias("max_day"),
         )
-        .orderBy("z_bucket")
     )
 
 
@@ -4959,7 +4915,6 @@ def q_bitmap_distinct_rollup(spark, sf_dir):
     return (
         merged.groupBy("event_type")
         .agg(F.sum(F.expr("bitmap_count(bm)")).alias("distinct_users"))
-        .orderBy("event_type")
     )
 
 
@@ -5058,7 +5013,7 @@ def q_user_value_trend(spark, sf_dir):
             / F.col("n").cast("double")
         )
         .alias("intercept"),
-    ).orderBy("user_id")
+    )
 
 
 @register(
@@ -5126,7 +5081,6 @@ def q_streaming_bitmap_distinct(spark, sf_dir):
     return (
         merged.groupBy("event_type")
         .agg(F.sum(F.expr("bitmap_count(bm)")).alias("distinct_users"))
-        .orderBy("event_type")
     )
 
 
@@ -5163,7 +5117,6 @@ def q_orc_roundtrip_events(spark, sf_dir):
             F.count(F.lit(1)).alias("n_events"),
             exact_sum("value").alias("sum_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -5312,7 +5265,6 @@ def _bucketed_join_relation(spark, sf_dir, tl, to):
             .cast("bigint")
             .alias("revenue_cents"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -5338,8 +5290,8 @@ def q_bucketed_join_zero_shuffle(spark, sf_dir):
     per-bucket sorted on the join key, layout recorded in the catalog);
     the join then plans as a sort-merge join whose physical plan shows
     `Bucketed: true` on both scans and ZERO exchange below the join —
-    the only shuffles left are the 5-row aggregate and the final sort
-    (plan-gated in tests/test_plans.py).  At 100 TB this is the lever
+    the only shuffle left is the 5-row aggregate (plan-gated in
+    tests/test_plans.py).  At 100 TB this is the lever
     for a fact pair joined by every downstream query (lineitem ⋈ orders
     here): pay the co-location shuffle once at ingest, never again.
     Broadcast is disabled for the join so the measured plan is the one
@@ -5453,7 +5405,6 @@ def q_salted_join_hotkey(spark, sf_dir):
     return (
         salted_join(hot, totals, "user_id", n_salts=32, salt_source="event_id")
         .select("event_id", "user_id", "n_events")
-        .orderBy("event_id")
     )
 
 
@@ -5523,7 +5474,6 @@ def q_schema_evolution_read(spark, sf_dir):
             F.count("value").alias("n_with_value"),
             exact_sum("value").alias("sum_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -5617,7 +5567,6 @@ def q_schema_evolution_write(spark, sf_dir):
             exact_sum("value").alias("sum_value"),
             F.sum("event_id").alias("sum_ids"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -5659,10 +5608,8 @@ def _snapshot_workspace(spark, sf_dir):
 
 
 def _snapshot_agg(df):
-    return (
-        df.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("event_id").alias("sum_ids"))
-        .orderBy("event_type")
+    return df.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"), F.sum("event_id").alias("sum_ids")
     )
 
 

@@ -72,7 +72,7 @@ def q_corpus_sample_hash(spark, sf_dir):
     stable under repartitioning, unlike seeded df.sample()
     (ext/corpus.hash_sample)."""
     docs = _t(spark, sf_dir, "documents")
-    return corpus.hash_sample(docs, 10).select("doc_id", "lang").orderBy("doc_id")
+    return corpus.hash_sample(docs, 10).select("doc_id", "lang")
 
 
 @register(
@@ -146,7 +146,7 @@ def q_corpus_interleave(spark, sf_dir):
     """Deterministic round-robin source mixing: position i of every source
     precedes position i+1 of any source (ext/corpus.interleave_sources)."""
     docs = _t(spark, sf_dir, "documents")
-    return corpus.interleave_sources(docs).orderBy("mix_rank")
+    return corpus.interleave_sources(docs)
 
 
 @register(
@@ -177,7 +177,6 @@ def q_corpus_curation_topk(spark, sf_dir):
             F.col("n_tokens").cast("bigint").alias("n_tokens"),
             F.col("rk").cast("bigint").alias("rk"),
         )
-        .orderBy("lang", "source", "rk")
     )
 
 
@@ -225,7 +224,6 @@ def q_corpus_split_assign(spark, sf_dir):
     return (
         corpus.split_assign(docs, val_pct=5, test_pct=5)
         .select("doc_id", "lang", "split")
-        .orderBy("doc_id")
     )
 
 
@@ -246,9 +244,7 @@ def q_corpus_ngram_topk(spark, sf_dir):
     (ext/corpus.ngram_topk) — the boilerplate-mining relation the jaccard
     auto-selector summarizes; map-side-combined count + top-k heap."""
     docs = _t(spark, sf_dir, "documents")
-    return corpus.ngram_topk(docs, k=50, n=3).orderBy(
-        F.col("df").desc(), "sh"
-    )
+    return corpus.ngram_topk(docs, k=50, n=3)
 
 
 @register(
@@ -303,7 +299,6 @@ def q_corpus_stratified_sample(spark, sf_dir):
     return (
         corpus.stratified_sample(docs, quota=20, strata=("lang", "source"))
         .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
     )
 
 
@@ -344,7 +339,7 @@ def q_corpus_chunk_dedup(spark, sf_dir):
     of every web-corpus build, adapted to newline-free docs; every doc
     survives (possibly with clean_text = '')."""
     docs = _t(spark, sf_dir, "documents")
-    return corpus.chunk_boilerplate_scrub(docs, chunk=3, min_df=3).orderBy("doc_id")
+    return corpus.chunk_boilerplate_scrub(docs, chunk=3, min_df=3)
 
 
 # ---------------------------------------------------------------------------
@@ -448,7 +443,6 @@ def q_ml_ann_neighbors(spark, sf_dir):
     return (
         exact.crossJoin(F.broadcast(ov))
         .select("cid", "cosine", (F.col("n_ov") >= 6).alias("ann_overlap_ok"))
-        .orderBy(F.col("cosine").desc(), "cid")
     )
 
 
@@ -599,7 +593,7 @@ def q_corpus_chunk_overlap(spark, sf_dir):
     array is built per row by a higher-order transform (token array never
     replicated per position) then posexploded."""
     docs = _t(spark, sf_dir, "documents")
-    return corpus.chunk_overlap(docs, size=64, stride=48).orderBy("doc_id", "chunk_idx")
+    return corpus.chunk_overlap(docs, size=64, stride=48)
 
 
 def _dup_spans_oracle(n: int = 8) -> str:
@@ -725,10 +719,7 @@ def q_corpus_vocab_growth(spark, sf_dir):
     from pyspark.sql import Window as W
 
     w = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, 0)
-    return (
-        buckets.withColumn("vocab_size", F.sum("new_tokens").over(w).cast("bigint"))
-        .orderBy("bucket")
-    )
+    return buckets.withColumn("vocab_size", F.sum("new_tokens").over(w).cast("bigint"))
 
 
 @register(
@@ -842,5 +833,4 @@ def q_corpus_temperature_mix(spark, sf_dir):
             "keep_ppm",
             F.coalesce("n_kept", F.lit(0)).cast("bigint").alias("n_kept"),
         )
-        .orderBy("source")
     )

@@ -910,7 +910,6 @@ def q_salted_user_event_totals(spark, sf_dir):
             F.sum("pn").alias("n_events"),
             (F.sum("pv").cast("double") / F.lit(100.0)).alias("total_value"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -951,7 +950,6 @@ def q_embedding_stats_by_label(spark, sf_dir):
                 F.max(F.array_max(F.expr("transform(embedding, x -> CAST(x AS DOUBLE))"))), 6
             ).alias("max_component"),
         )
-        .orderBy("label")
     )
 
 
@@ -1065,7 +1063,6 @@ def q_text_fuzzy_probe_match(spark, sf_dir):
             F.count_distinct("tok").alias("n_tokens"),
             F.count_distinct("doc_id").alias("n_docs"),
         )
-        .orderBy("probe")
     )
 
 
@@ -1122,7 +1119,7 @@ def q_embed_vector_algebra(spark, sf_dir):
         )
         .cast("bigint")
         .alias("n_above_mean"),
-    ).orderBy("vec_id")
+    )
 
 
 @register(
@@ -1182,7 +1179,6 @@ def q_grouped_weighted_mean_pandas(spark, sf_dir):
     return (
         ev.groupBy("event_type")
         .agg(wmean("iv", "w").alias("wmean_centi"))
-        .orderBy("event_type")
     )
 
 
@@ -1924,7 +1920,6 @@ def q_udtf_split_sentences(spark, sf_dir):
         SELECT d.doc_id, s.sent_idx, s.sentence
         FROM __udtf_docs d,
              LATERAL sparkgraft_split_sentences(d.text) s
-        ORDER BY d.doc_id, s.sent_idx
         """
     )
 
@@ -2178,7 +2173,7 @@ def q_embed_arrow_norms(spark, sf_dir):
     hash-identical to the SQL oracle."""
     return simsearch.arrow_vector_norms(
         simsearch.finite_vectors(_t(spark, sf_dir, "embeddings"))
-    ).orderBy("vec_id")
+    )
 
 
 @register(
@@ -2211,7 +2206,6 @@ def q_events_variant_k_stats(spark, sf_dir):
             F.min("k").alias("min_k"),
             F.max("k").alias("max_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -2237,7 +2231,6 @@ def q_text_langid_confusion(spark, sf_dir):
         text.lang_id(docs, keep=("lang",))
         .groupBy("lang", "lang_pred")
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("lang", "lang_pred")
     )
 
 
@@ -2564,9 +2557,7 @@ def q_dedup_incremental_minhash(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     hist = docs.where(F.expr("pmod(doc_id, 5) <> 0"))
     batch = docs.where(F.expr("pmod(doc_id, 5) = 0"))
-    return dedup.incremental_minhash_pairs(hist, batch, threshold=0.5).orderBy(
-        "doc_a", "doc_b"
-    )
+    return dedup.incremental_minhash_pairs(hist, batch, threshold=0.5)
 
 
 # ---------------------------------------------------------------------------
@@ -2651,7 +2642,7 @@ def q_text_bpe_merges(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     wf = bpe.word_freqs(docs).filter(~F.col("word").rlike("[()]"))
     merges, _ = bpe.learn_merges(wf, 4)
-    return bpe.merges_df(spark, merges).orderBy("step")
+    return bpe.merges_df(spark, merges)
 
 
 def _bpe_encode_oracle(n_merges: int = 4) -> str:
