@@ -5,8 +5,10 @@ Parity with the reference's Hive connector (SURVEY §2.1 S3-S7):
 - ``TableSpec``      (name, schema, partition keys) with partition columns
                      physically last (reference HiveConnector.scala:13-15 —
                      INSERT OVERWRITE binds partition columns positionally)
-- ``ensure_table``   create-if-absent from an empty frame, parquet+snappy
-                     (HiveConnector.scala:17-27)
+- ``ensure_table``   create-if-absent from an empty frame, parquet with
+                     the engine's codec pinned as a table property
+                     (HiveConnector.scala:17-27 pins snappy; we use zstd,
+                     ``session.PARQUET_CODEC``)
 - ``extract_sql``    templated ``{TABLE}`` SQL over the registered table
                      (HiveConnector.scala:29-32)
 - ``load_overwrite`` dynamic-partition INSERT OVERWRITE straight from the
@@ -31,6 +33,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
+
+from sparkgraft.session import PARQUET_CODEC
 
 
 @dataclass(frozen=True)
@@ -236,7 +240,15 @@ def ensure_table(spark: SparkSession, spec: TableSpec) -> None:
     """Create the partitioned parquet table if it does not exist; on the
     way, collect staging debris a crashed load of an earlier version left
     behind (the startup sweep — every pipeline passes through here before
-    reading or loading, so orphans never outlive one horizon + one run)."""
+    reading or loading, so orphans never outlive one horizon + one run).
+
+    The create pins ``PARQUET_CODEC`` as the table's ``compression``
+    storage property.  ``insertInto`` writes with that property, not the
+    session's codec conf, so every session that writes through the
+    metastore writes the same layout.  A table created earlier keeps the
+    codec it was created with (``snappy`` before zstd became the engine's
+    codec): there is no migration, and its old files are not rewritten.
+    Files of both codecs read back alike, partition by partition."""
     # one metastore listing serves both the sweep and the existence check
     # (tableExists was a second ~100 ms Derby round-trip per call; this
     # function runs several times per load).  Qualified names fall back to
@@ -253,7 +265,9 @@ def ensure_table(spark: SparkSession, spec: TableSpec) -> None:
         return
     empty = spark.createDataFrame([], spec.schema).select(*spec.ordered_columns)
     writer = (
-        empty.write.mode("ignore").format("parquet").option("compression", "snappy")
+        empty.write.mode("ignore")
+        .format("parquet")
+        .option("compression", PARQUET_CODEC)
     )
     if spec.partition_keys:
         writer = writer.partitionBy(*spec.partition_keys)
@@ -315,7 +329,7 @@ def save_bucketed(
     writer = (
         df.write.mode("overwrite")
         .format("parquet")
-        .option("compression", "snappy")
+        .option("compression", PARQUET_CODEC)
         .bucketBy(n_buckets, *cols)
     )
     if sort:
@@ -351,7 +365,7 @@ def save_clustered(
         .sortWithinPartitions(*cols)
         .write.mode("overwrite")
         .format("parquet")
-        .option("compression", "snappy")
+        .option("compression", PARQUET_CODEC)
         .save(path)
     )
 

@@ -14,6 +14,8 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from tests.test_pipeline import raw_dir  # noqa: F401  (fixture: Oct + Nov CSVs)
+
 #: the checkout under test; the subprocess scripts import sparkgraft from it
 REPO = str(Path(__file__).resolve().parents[1])
 
@@ -806,3 +808,95 @@ def test_load_overwrite_writes_target_directly(spark, monkeypatch):
         monkeypatch.undo()
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         spark.sql("DROP TABLE IF EXISTS t_direct")
+
+
+def _describe(spark, name: str, key: str) -> str:
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+    return next(r.data_type for r in rows if r.col_name == key)
+
+
+def _chunk_codecs(spark, name: str) -> dict[str, frozenset[str]]:
+    """Partition directory -> codecs of every column chunk in its files."""
+    import pyarrow.parquet as pq
+
+    root = Path(_describe(spark, name, "Location").removeprefix("file:"))
+    out: dict[str, frozenset[str]] = {}
+    for f in root.glob("*/*.parquet"):
+        meta = pq.read_metadata(f)
+        out[f.parent.name] = out.get(f.parent.name, frozenset()).union(
+            meta.row_group(i).column(j).compression
+            for i in range(meta.num_row_groups)
+            for j in range(meta.num_columns)
+        )
+    return out
+
+
+def test_load_months_writes_zstd(spark, raw_dir):
+    """A month load into a fresh table writes every column chunk of every
+    data file with the engine's codec, pinned as the table's storage
+    property at create time."""
+    from dataclasses import replace
+
+    from sparkgraft.pipelines import user_activity as ua
+
+    spec = replace(ua.USER_ACTIVITY, name="t_zstd")
+    spark.sql("DROP TABLE IF EXISTS t_zstd")
+    try:
+        ua.load_months(spark, raw_dir, ["2019-10"], spec)
+        assert _describe(spark, "t_zstd", "Storage Properties") == "[compression=zstd]"
+        codecs = _chunk_codecs(spark, "t_zstd")
+        assert len(codecs) > 1, codecs
+        assert set(codecs.values()) == {frozenset({"ZSTD"})}, codecs
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_zstd")
+
+
+def test_snappy_table_upgrade_keeps_rows(spark, raw_dir):
+    """A table created with snappy pinned (the engine's codec before zstd)
+    keeps it: later loads write snappy too, and the rows equal a fresh
+    one-shot load of the same months.  Once the property is switched by
+    hand, partitions of both codecs coexist and read back alike."""
+    from collections import Counter
+    from dataclasses import replace
+
+    from sparkgraft.pipelines import user_activity as ua
+
+    old = replace(ua.USER_ACTIVITY, name="t_snappy_old")
+    fresh = replace(ua.USER_ACTIVITY, name="t_snappy_fresh")
+
+    def rows(name):
+        return Counter(tuple(r) for r in spark.table(name).collect())
+
+    for name in (old.name, fresh.name):
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    try:
+        # the create of the earlier ensure_table, then its first load
+        (
+            spark.createDataFrame([], old.schema)
+            .select(*old.ordered_columns)
+            .write.mode("ignore")
+            .format("parquet")
+            .option("compression", "snappy")
+            .partitionBy(*old.partition_keys)
+            .saveAsTable(old.name)
+        )
+        ua.load_months(spark, raw_dir, ["2019-10"], old)
+        ua.load_months(spark, raw_dir, ["2019-11"], old)
+        ua.load_months(spark, raw_dir, ["2019-10"], old)
+        ua.load_months(spark, raw_dir, ["2019-10", "2019-11"], fresh)
+
+        assert _describe(spark, old.name, "Storage Properties") == "[compression=snappy]"
+        assert set(_chunk_codecs(spark, old.name).values()) == {frozenset({"SNAPPY"})}
+        assert set(_chunk_codecs(spark, fresh.name).values()) == {frozenset({"ZSTD"})}
+        expected = rows(fresh.name)
+        assert sum(expected.values()) == 9
+        assert rows(old.name) == expected
+
+        spark.sql(f"ALTER TABLE {old.name} SET SERDEPROPERTIES ('compression'='zstd')")
+        ua.load_months(spark, raw_dir, ["2019-11"], old)
+        codecs = _chunk_codecs(spark, old.name)
+        assert set(codecs.values()) == {frozenset({"SNAPPY"}), frozenset({"ZSTD"})}, codecs
+        assert rows(old.name) == expected
+    finally:
+        for name in (old.name, fresh.name):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
