@@ -41,3 +41,23 @@ def test_codec_lane_runs_from_any_working_directory(sf_dir, tmp_path):
         env=env,
     )
     assert "LANE_OK" in proc.stdout, f"stdout={proc.stdout[-2000:]}\nstderr={proc.stderr[-3000:]}"
+
+
+def test_codegen_cache_holds_a_repeating_query_mix(spark):
+    """A query mix repeated against the same tables must reuse its
+    generated classes.  Each query below differs only in a long literal,
+    which codegen inlines into the Java source, so the mix is ~300
+    distinct classes: more than Spark's default 100-entry cache holds,
+    where LRU misses on every access of the second cycle."""
+    from pyspark.sql import functions as F
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def cycle():
+        for i in range(150):
+            spark.range(0, 1, 1, 1).select(F.col("id") + F.lit(10**12 + i)).collect()
+
+    cycle()
+    before = compiles.getCount()
+    cycle()
+    assert compiles.getCount() - before == 0

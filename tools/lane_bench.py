@@ -40,6 +40,9 @@ def main() -> None:
     spark = get_spark("sparkgraft-lane-bench", master=f"local[{args.cpus}]")
     qfns = registry.queries()
     spark.read.parquet(f"{args.sf}/region.parquet").count()  # warm-up
+    # one histogram sample per Janino compile; a lane whose last sample
+    # still compiles recompiles its generated classes whenever it repeats
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     out: dict[str, dict] = {}
     for name in args.lanes:
@@ -49,11 +52,13 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"lane_bench: {name}")
         samples = []
         for i in range(args.runs):
+            compiles_before = compiles.getCount()
             t0 = time.perf_counter()
             df = qfns[name](spark, args.sf)
             t_build = time.perf_counter() - t0
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
+            compiled = compiles.getCount() - compiles_before
             if i == 0 and args.explain_dir:
                 os.makedirs(args.explain_dir, exist_ok=True)
                 plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -65,8 +70,13 @@ def main() -> None:
             "min": min(samples),
             "samples": samples,
             "build_s_last": round(t_build, 3),
+            "codegen_compiles": compiled,
         }
-        print(f"{min(samples):8.3f}  (runs: {samples}, plan-build {t_build:.3f}s)  {name}", flush=True)
+        print(
+            f"{min(samples):8.3f}  (runs: {samples}, plan-build {t_build:.3f}s, "
+            f"compiles {compiled})  {name}",
+            flush=True,
+        )
     print(json.dumps(out))
     spark.stop()
 
