@@ -20,26 +20,29 @@ marker family real camera files emit routinely).  Progressive decode
 (T.81 Annex G) covers spectral selection AND successive approximation:
 interleaved/non-interleaved DC first + refinement scans, AC first scans
 with cross-block EOB runs, AC refinement scans with positional
-correction bits, DHT/DQT/DRI between scans, restarts inside any scan —
-and the progressive ENCODERS (gray + 4:4:4 color) share the baseline
-quantizer, so a progressive stream decodes to byte-identical pixels
-(the property the tests pin).  Sampling factors above 2, every other
-SOF family, arithmetic coding, 12-bit precision, and DNL all raise
-``ValueError`` naming the unsupported feature — they are unsupported
-INPUTS to a working decoder.
+correction bits, DHT/DQT/DRI between scans, restarts inside any scan.
+The encoder mirrors the decoder: one walk over the frame's component
+list (``_encode``) writes every layout — gray, 4:4:4 and subsampled
+color, baseline and progressive — quantizing each block once, so a
+progressive stream decodes to byte-identical pixels to its baseline
+sibling (the property the tests pin).  Sampling factors above 2, every
+other SOF family, arithmetic coding, 12-bit precision, and DNL all
+raise ``ValueError`` naming the unsupported feature — they are
+unsupported INPUTS to a working decoder.
 The color transform is FIXED-POINT integer arithmetic (16-bit scaled
 JFIF coefficients, the libjpeg convention: ``(c*v + 32768) >> 16`` with
 arithmetic shift = floor), NOT float — so decode output is bit-stable
 and an ANSI-SQL oracle can reproduce it with FLOOR((c*v + 32768)/65536)
 exactly (every intermediate fits float64's 2^53 integer range).
 
-Huffman tables are the spec's Annex K luminance tables (ITU-T T.81
-Tables K.3/K.5), built canonically from (BITS, HUFFVAL); the zigzag
-order is GENERATED from the diagonal-walk definition rather than
-transcribed.  Encoder and decoder share none of the hot code paths: the
-encoder emits bits MSB-first with 0xFF byte stuffing, the decoder
-re-derives codes from the DHT segment it parses out of the byte stream —
-so a roundtrip genuinely exercises both directions.
+Huffman tables are the spec's Annex K tables (ITU-T T.81 Tables K.3/K.5
+for luminance, K.4/K.6 for chrominance; progressive AC scans ship their
+own), built canonically from (BITS, HUFFVAL); the zigzag order is
+GENERATED from the diagonal-walk definition rather than transcribed.
+Encoder and decoder share none of the hot code paths: the encoder emits
+bits MSB-first with 0xFF byte stuffing, the decoder re-derives codes
+from the DHT segment it parses out of the byte stream — so a roundtrip
+genuinely exercises both directions.
 
 Exactness contract the driver lane leans on: an image whose 8x8 blocks
 are each CONSTANT with even values quantizes losslessly under the flat
@@ -183,11 +186,22 @@ def _canonical_codes(bits, vals):
     return table
 
 
+#: the Annex K tables by DHT slot (0 = luminance, 1 = chrominance) as
+#: (DC BITS, DC HUFFVAL, AC BITS, AC HUFFVAL), and their canonical codes
+_ANNEX_K = (
+    (DC_BITS, DC_VALS, AC_BITS, AC_VALS),
+    (DC_CHROMA_BITS, DC_CHROMA_VALS, AC_CHROMA_BITS, AC_CHROMA_VALS),
+)
+_DC_CODES = tuple(_canonical_codes(t[0], t[1]) for t in _ANNEX_K)
+_AC_CODES = tuple(_canonical_codes(t[2], t[3]) for t in _ANNEX_K)
+
+
 class _BitWriter:
     def __init__(self):
         self.out = bytearray()
         self._acc = 0
         self._n = 0
+        self._rst = 0
 
     def write(self, code: int, length: int) -> None:
         self._acc = (self._acc << length) | (code & ((1 << length) - 1))
@@ -204,6 +218,14 @@ class _BitWriter:
         if self._n:
             pad = 8 - self._n
             self.write((1 << pad) - 1, pad)  # pad with 1-bits (spec F.1.2.3)
+
+    def restart(self) -> None:
+        """Close a restart interval: byte-align (1-bit pad, stuffed like
+        any entropy byte) and emit RSTn with the modulo-8 sequence number
+        (T.81 E.1.4).  Callers emit none after the LAST interval."""
+        self.flush()
+        self.out += bytes([0xFF, 0xD0 + (self._rst & 7)])
+        self._rst += 1
 
 
 class _BitReader:
@@ -515,356 +537,8 @@ def _quantize_block(block: list[int], qtable) -> list[int]:
     ]
 
 
-def _encode_block(
-    w: _BitWriter, block: list[int], pred: int, dc_codes, ac_codes, qtable
-) -> int:
-    """FDCT, quantize, differential-DC + run-length-AC Huffman code ONE
-    8x8 block; returns the new DC predictor."""
-    quant = _quantize_block(block, qtable)
-    diff = quant[0] - pred
-    size, payload = _magnitude(diff)
-    code, length = dc_codes[size]
-    w.write(code, length)
-    if size:
-        w.write(payload, size)
-    run = 0
-    last_nz = max((i for i in range(1, 64) if quant[i]), default=0)
-    for i in range(1, 64):
-        if i > last_nz:
-            code, length = ac_codes[0x00]  # EOB
-            w.write(code, length)
-            break
-        v = quant[i]
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            code, length = ac_codes[0xF0]  # ZRL
-            w.write(code, length)
-            run -= 16
-        size, payload = _magnitude(v)
-        code, length = ac_codes[(run << 4) | size]
-        w.write(code, length)
-        w.write(payload, size)
-        run = 0
-    return quant[0]
-
-
 def _table_seg(cls: int, slot: int, bits, vals) -> bytes:
     return _seg(0xC4, bytes([(cls << 4) | slot]) + bytes(bits) + bytes(vals))
-
-
-def _check_restart_interval(restart_interval: int) -> None:
-    if not 0 <= restart_interval <= 0xFFFF:
-        raise ValueError("jpeg: restart interval must be 0..65535 MCUs")
-
-
-def _maybe_restart(
-    w: _BitWriter, interval: int, mcu_idx: int, total: int, rst_idx: int
-) -> int:
-    """After MCU ``mcu_idx`` (1-based): if a restart interval just closed
-    and MCUs remain, byte-align (1-bit pad via flush, stuffed like any
-    entropy byte) and emit RSTn with the modulo-8 sequence number (T.81
-    E.1.4 — no marker after the LAST interval).  Returns the next
-    sequence index; the caller resets its DC predictors iff it advanced."""
-    if interval and mcu_idx % interval == 0 and mcu_idx < total:
-        w.flush()
-        w.out += bytes([0xFF, 0xD0 + (rst_idx & 7)])
-        return rst_idx + 1
-    return rst_idx
-
-
-def encode_gray(
-    width: int, height: int, pixels: bytes, qtable=FLAT_Q16,
-    restart_interval: int = 0,
-) -> bytes:
-    """Write a real baseline grayscale JPEG: FDCT, quantization under
-    ``qtable`` (zigzag-ordered in the DQT segment, as the spec requires),
-    differential DC, run-length AC, Annex K Huffman coding, byte
-    stuffing.  Edge blocks of non-multiple-of-8 images are padded by edge
-    replication (the standard convention); the decoder crops back.
-    ``restart_interval`` > 0 emits a DRI segment and an RSTn marker after
-    every that-many MCUs (one block each, for grayscale), resetting the
-    DC predictor — the camera-file layout."""
-    if len(pixels) != width * height:
-        raise ValueError("jpeg: pixels must be width*height bytes")
-    if not (0 < width <= 0xFFFF and 0 < height <= 0xFFFF):
-        raise ValueError("jpeg: dimensions out of range")
-    _check_restart_interval(restart_interval)
-    dc_codes = _canonical_codes(DC_BITS, DC_VALS)
-    ac_codes = _canonical_codes(AC_BITS, AC_VALS)
-
-    w = _BitWriter()
-    pred = 0
-    bw = (width + 7) // 8
-    bh = (height + 7) // 8
-    total = bw * bh
-    mcu_idx = rst_idx = 0
-    for by in range(bh):
-        for bx in range(bw):
-            block = _extract_block(pixels, width, height, bx, by)
-            pred = _encode_block(w, block, pred, dc_codes, ac_codes, qtable)
-            mcu_idx += 1
-            nxt = _maybe_restart(w, restart_interval, mcu_idx, total, rst_idx)
-            if nxt != rst_idx:
-                rst_idx, pred = nxt, 0
-    w.flush()
-
-    dri = (
-        [_seg(0xDD, struct.pack(">H", restart_interval))]
-        if restart_interval
-        else []
-    )
-    return b"".join(
-        [
-            SOI,
-            _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
-            _seg(0xDB, b"\x00" + bytes(qtable)),
-            _seg(
-                0xC0,
-                struct.pack(">BHHB", 8, height, width, 1)
-                + bytes([1, 0x11, 0]),
-            ),
-            _table_seg(0, 0, DC_BITS, DC_VALS),
-            _table_seg(1, 0, AC_BITS, AC_VALS),
-            *dri,
-            _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0])),
-            bytes(w.out),
-            EOI,
-        ]
-    )
-
-
-def encode_ycbcr(
-    width: int,
-    height: int,
-    y_plane: bytes,
-    cb_plane: bytes,
-    cr_plane: bytes,
-    qtable=FLAT_Q16,
-    chroma_qtable=FLAT_Q16,
-    restart_interval: int = 0,
-) -> bytes:
-    """Write a baseline YCbCr 4:4:4 color JPEG from the three planes:
-    interleaved MCUs (one 8x8 block per component, Y then Cb then Cr),
-    per-component differential-DC predictors, Annex K LUMINANCE tables
-    (K.3/K.5) for Y and CHROMINANCE tables (K.4/K.6) for Cb/Cr, quant
-    slot 0 for Y and slot 1 for chroma.  Taking planes directly (rather
-    than RGB — :func:`encode_color` layers the fixed-point forward
-    transform on top) keeps the lossless fixture class reachable: an
-    even-valued constant block in ANY plane quantizes losslessly under
-    the flat q=16 table, exactly as in the grayscale contract.
-    ``restart_interval`` > 0 emits DRI + per-interval RSTn markers,
-    resetting ALL THREE DC predictors at each boundary."""
-    n = width * height
-    if not (len(y_plane) == len(cb_plane) == len(cr_plane) == n):
-        raise ValueError("jpeg: planes must each be width*height bytes")
-    if not (0 < width <= 0xFFFF and 0 < height <= 0xFFFF):
-        raise ValueError("jpeg: dimensions out of range")
-    _check_restart_interval(restart_interval)
-    luma_dc = _canonical_codes(DC_BITS, DC_VALS)
-    luma_ac = _canonical_codes(AC_BITS, AC_VALS)
-    chroma_dc = _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    chroma_ac = _canonical_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)
-    comps = (
-        (y_plane, luma_dc, luma_ac, qtable),
-        (cb_plane, chroma_dc, chroma_ac, chroma_qtable),
-        (cr_plane, chroma_dc, chroma_ac, chroma_qtable),
-    )
-
-    w = _BitWriter()
-    preds = [0, 0, 0]
-    bw = (width + 7) // 8
-    bh = (height + 7) // 8
-    total = bw * bh
-    mcu_idx = rst_idx = 0
-    for by in range(bh):
-        for bx in range(bw):
-            for ci, (plane, dc_codes, ac_codes, q) in enumerate(comps):
-                block = _extract_block(plane, width, height, bx, by)
-                preds[ci] = _encode_block(
-                    w, block, preds[ci], dc_codes, ac_codes, q
-                )
-            mcu_idx += 1
-            nxt = _maybe_restart(w, restart_interval, mcu_idx, total, rst_idx)
-            if nxt != rst_idx:
-                rst_idx, preds = nxt, [0, 0, 0]
-    w.flush()
-
-    dri = (
-        [_seg(0xDD, struct.pack(">H", restart_interval))]
-        if restart_interval
-        else []
-    )
-    return b"".join(
-        [
-            SOI,
-            _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
-            _seg(0xDB, b"\x00" + bytes(qtable)),
-            _seg(0xDB, b"\x01" + bytes(chroma_qtable)),
-            _seg(
-                0xC0,
-                struct.pack(">BHHB", 8, height, width, 3)
-                # component id, sampling 1x1, quant slot
-                + bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]),
-            ),
-            _table_seg(0, 0, DC_BITS, DC_VALS),
-            _table_seg(1, 0, AC_BITS, AC_VALS),
-            _table_seg(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
-            _table_seg(1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS),
-            *dri,
-            # per-component (DC table << 4) | AC table selectors
-            _seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])),
-            bytes(w.out),
-            EOI,
-        ]
-    )
-
-
-def encode_ycbcr_sub(
-    width: int,
-    height: int,
-    y_plane: bytes,
-    cb_plane: bytes,
-    cr_plane: bytes,
-    luma_h: int = 2,
-    luma_v: int = 2,
-    qtable=FLAT_Q16,
-    chroma_qtable=FLAT_Q16,
-    restart_interval: int = 0,
-) -> bytes:
-    """Baseline YCbCr with subsampled chroma at luma sampling
-    ``luma_h x luma_v`` (each 1 or 2; chroma is always 1x1): (2,2) is
-    4:2:0 — the dominant real-world layout — (2,1) is 4:2:2, (1,2) is
-    4:4:0.  Each MCU covers ``8*luma_h x 8*luma_v`` pixels and carries
-    ``luma_h*luma_v`` Y blocks (raster order) plus one Cb and one Cr
-    block.  Chroma is subsampled by TOP-LEFT SAMPLE (spec-legal — the
-    subsampling filter is the encoder's choice) because that is the
-    exact inverse of the decoder's replication upsample: chroma constant
-    per luma_h x luma_v pixel cell (and in the fixture class per whole
-    MCU) roundtrips bit-exactly, extending the even-constant-block
-    lossless contract to every subsampled layout the decoder accepts.
-    ``restart_interval`` > 0 emits DRI + per-interval RSTn markers,
-    resetting all three DC predictors at each boundary."""
-    if luma_h not in (1, 2) or luma_v not in (1, 2):
-        raise ValueError("jpeg: luma sampling factors must be 1 or 2")
-    if (luma_h, luma_v) == (1, 1):
-        raise ValueError("jpeg: 1x1 luma is 4:4:4 — use encode_ycbcr")
-    n = width * height
-    if not (len(y_plane) == len(cb_plane) == len(cr_plane) == n):
-        raise ValueError("jpeg: planes must each be width*height bytes")
-    if not (0 < width <= 0xFFFF and 0 < height <= 0xFFFF):
-        raise ValueError("jpeg: dimensions out of range")
-    _check_restart_interval(restart_interval)
-    luma_dc = _canonical_codes(DC_BITS, DC_VALS)
-    luma_ac = _canonical_codes(AC_BITS, AC_VALS)
-    chroma_dc = _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    chroma_ac = _canonical_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)
-
-    mcux = (width + 8 * luma_h - 1) // (8 * luma_h)
-    mcuy = (height + 8 * luma_v - 1) // (8 * luma_v)
-    cw, ch = mcux * 8, mcuy * 8
-    cb_sub = bytearray(cw * ch)
-    cr_sub = bytearray(cw * ch)
-    for cy in range(ch):
-        sy = min(luma_v * cy, height - 1)
-        for cx in range(cw):
-            sx = min(luma_h * cx, width - 1)
-            cb_sub[cy * cw + cx] = cb_plane[sy * width + sx]
-            cr_sub[cy * cw + cx] = cr_plane[sy * width + sx]
-
-    w = _BitWriter()
-    preds = [0, 0, 0]
-    total = mcux * mcuy
-    mcu_idx = rst_idx = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for by in range(luma_v):
-                for bx in range(luma_h):
-                    block = _extract_block(
-                        y_plane,
-                        width,
-                        height,
-                        mx * luma_h + bx,
-                        my * luma_v + by,
-                    )
-                    preds[0] = _encode_block(
-                        w, block, preds[0], luma_dc, luma_ac, qtable
-                    )
-            for ci, sub in ((1, cb_sub), (2, cr_sub)):
-                block = _extract_block(bytes(sub), cw, ch, mx, my)
-                preds[ci] = _encode_block(
-                    w, block, preds[ci], chroma_dc, chroma_ac, chroma_qtable
-                )
-            mcu_idx += 1
-            nxt = _maybe_restart(w, restart_interval, mcu_idx, total, rst_idx)
-            if nxt != rst_idx:
-                rst_idx, preds = nxt, [0, 0, 0]
-    w.flush()
-
-    dri = (
-        [_seg(0xDD, struct.pack(">H", restart_interval))]
-        if restart_interval
-        else []
-    )
-    sampling = (luma_h << 4) | luma_v
-    return b"".join(
-        [
-            SOI,
-            _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
-            _seg(0xDB, b"\x00" + bytes(qtable)),
-            _seg(0xDB, b"\x01" + bytes(chroma_qtable)),
-            _seg(
-                0xC0,
-                struct.pack(">BHHB", 8, height, width, 3)
-                # Y samples luma_h x luma_v; chroma 1x1
-                + bytes([1, sampling, 0, 2, 0x11, 1, 3, 0x11, 1]),
-            ),
-            _table_seg(0, 0, DC_BITS, DC_VALS),
-            _table_seg(1, 0, AC_BITS, AC_VALS),
-            _table_seg(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
-            _table_seg(1, 1, AC_CHROMA_BITS, AC_CHROMA_VALS),
-            *dri,
-            _seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])),
-            bytes(w.out),
-            EOI,
-        ]
-    )
-
-
-def encode_ycbcr_420(
-    width: int,
-    height: int,
-    y_plane: bytes,
-    cb_plane: bytes,
-    cr_plane: bytes,
-    qtable=FLAT_Q16,
-    chroma_qtable=FLAT_Q16,
-    restart_interval: int = 0,
-) -> bytes:
-    """4:2:0 (luma 2x2) — see :func:`encode_ycbcr_sub`."""
-    return encode_ycbcr_sub(
-        width, height, y_plane, cb_plane, cr_plane, 2, 2, qtable,
-        chroma_qtable, restart_interval,
-    )
-
-
-def encode_color(
-    width: int, height: int, rgb: bytes, qtable=FLAT_Q16
-) -> bytes:
-    """Baseline YCbCr 4:4:4 JPEG from interleaved RGB bytes: the
-    fixed-point forward transform (:func:`rgb_to_ycbcr`) then
-    :func:`encode_ycbcr`."""
-    if len(rgb) != 3 * width * height:
-        raise ValueError("jpeg: rgb must be 3*width*height bytes")
-    n = width * height
-    yp, cbp, crp = bytearray(n), bytearray(n), bytearray(n)
-    for i in range(n):
-        yp[i], cbp[i], crp[i] = rgb_to_ycbcr(
-            rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
-        )
-    return encode_ycbcr(width, height, bytes(yp), bytes(cbp), bytes(crp),
-                        qtable, qtable)
 
 
 #: default progressive scan script (spectral selection + one bit of
@@ -880,6 +554,14 @@ PROGRESSIVE_SCRIPT = (
     (1, 5, 1, 0),
     (6, 63, 1, 0),
 )
+
+
+def _closes_interval(restart_interval: int, done: int, total: int) -> bool:
+    """True when ``done`` MCUs close a restart interval and MCUs remain:
+    the point to emit RSTn (T.81 E.1.4 — none after the LAST interval)."""
+    return (
+        restart_interval > 0 and done % restart_interval == 0 and done < total
+    )
 
 
 def _uniform_table(symbols) -> tuple[tuple, tuple]:
@@ -950,11 +632,7 @@ def _enc_ac_first(
             eob_run += 1
             if eob_run == 0x7FFF:
                 flush_eob()
-        if (
-            restart_interval
-            and (i + 1) % restart_interval == 0
-            and i + 1 < total
-        ):
+        if _closes_interval(restart_interval, i + 1, total):
             flush_eob()
             emit_restart()
     flush_eob()
@@ -1028,14 +706,333 @@ def _enc_ac_refine(
             )
             if eob_run == 0x7FFF:
                 flush_eob()
-        if (
-            restart_interval
-            and (i + 1) % restart_interval == 0
-            and i + 1 < total
-        ):
+        if _closes_interval(restart_interval, i + 1, total):
             flush_eob()
             emit_restart()
     flush_eob()
+
+
+def _mcu_scan(
+    mcus, ncomps: int, se: int, ah: int, al: int, restart_interval: int
+) -> bytes:
+    """Entropy-code one INTERLEAVED scan over ``mcus`` (per MCU, its
+    ``(component index, table slot, block)`` list in A.2.3 order): the
+    baseline scan (``se`` = 63: differential DC plus run-length AC under
+    the Annex K tables), a progressive DC first scan (``ah`` = 0:
+    differential DC of the point-transformed ``dc >> al``) or a DC
+    refinement scan (one raw bit per block).  A closed restart interval
+    emits RSTn and resets every DC predictor."""
+    w = _BitWriter()
+    preds = [0] * ncomps
+    for m, mcu in enumerate(mcus, 1):
+        for ci, slot, blk in mcu:
+            if ah:  # DC refinement: no Huffman, no predictor
+                w.write((blk[0] >> al) & 1, 1)
+                continue
+            dc = blk[0] >> al  # arithmetic shift = the decoder's OR inverse
+            size, payload = _magnitude(dc - preds[ci])
+            w.write(*_DC_CODES[slot][size])
+            if size:
+                w.write(payload, size)
+            preds[ci] = dc
+            if se:  # baseline AC: zero runs split by ZRL, EOB after the last
+                ac = _AC_CODES[slot]
+                run = 0
+                for v in blk[1:]:
+                    if v == 0:
+                        run += 1
+                        continue
+                    while run > 15:
+                        w.write(*ac[0xF0])
+                        run -= 16
+                    size, payload = _magnitude(v)
+                    w.write(*ac[(run << 4) | size])
+                    w.write(payload, size)
+                    run = 0
+                if run:
+                    w.write(*ac[0x00])
+        if _closes_interval(restart_interval, m, len(mcus)):
+            w.restart()
+            preds = [0] * ncomps
+    w.flush()
+    return bytes(w.out)
+
+
+def _encode(
+    width: int,
+    height: int,
+    planes,
+    luma_h: int,
+    luma_v: int,
+    qtable,
+    chroma_qtable,
+    restart_interval: int,
+    scan_script=None,
+) -> bytes:
+    """Encode ``planes`` — ``(gray,)`` or ``(y, cb, cr)``, each
+    ``width*height`` bytes — with luma sampled ``luma_h x luma_v`` and
+    chroma 1x1: the one component-list walk behind every public encoder,
+    mirroring :func:`decode`.  Chroma of a subsampled layout is picked
+    top-left onto the MCU grid, then every block is quantized once
+    (:func:`_quantize_block`) on its component's MCU-padded grid, so
+    baseline and progressive streams carry identical coefficients.
+    ``scan_script`` None writes a baseline (SOF0) frame with one
+    interleaved scan; otherwise a progressive (SOF2) frame with one
+    interleaved scan per DC entry and one scan per component per AC
+    entry, the latter over the component's A.2.2 non-interleaved grid
+    and each behind its own uniform-length DHT."""
+    if not (0 < width <= 0xFFFF and 0 < height <= 0xFFFF):
+        raise ValueError("jpeg: dimensions out of range")
+    if not 0 <= restart_interval <= 0xFFFF:
+        raise ValueError("jpeg: restart interval must be 0..65535 MCUs")
+    progressive = scan_script is not None
+    if progressive:
+        if not scan_script or scan_script[0][:3] != (0, 0, 0):
+            raise ValueError(
+                # the grayscale encoder names an empty script as such
+                "jpeg: progressive scan script is empty"
+                if not scan_script and len(planes) == 1
+                else "jpeg: first progressive scan must be DC first"
+            )
+        for ss, se, ah, al in scan_script:
+            if ss == 0 and se != 0:
+                raise ValueError(
+                    "jpeg: a progressive scan cannot mix DC and AC"
+                )
+            if not (0 <= ss <= se <= 63 and 0 <= al <= 13):
+                raise ValueError("jpeg: invalid scan script entry")
+            if ah != 0 and ah != al + 1:
+                raise ValueError(
+                    "jpeg: successive approximation must refine one bit"
+                )
+
+    mcux = -(-width // (8 * luma_h))
+    mcuy = -(-height // (8 * luma_v))
+    subsampled = (luma_h, luma_v) != (1, 1)
+    if subsampled:
+        # chroma sample per MCU-grid position: the top-left pick, the
+        # exact inverse of the decoder's replication upsample
+        pick = [
+            min(luma_v * cy, height - 1) * width + min(luma_h * cx, width - 1)
+            for cy in range(mcuy * 8)
+            for cx in range(mcux * 8)
+        ]
+    qtables = (qtable, chroma_qtable)
+    mcus = [[] for _ in range(mcux * mcuy)]  # (comp, slot, block) per MCU
+    comps = []  # (component id, h, v, table slot, A.2.2 grid blocks)
+    for ci, plane in enumerate(planes):
+        h, v = (luma_h, luma_v) if ci == 0 else (1, 1)
+        slot = min(ci, 1)
+        pw, ph = width, height
+        if ci and subsampled:
+            pw, ph = mcux * 8, mcuy * 8
+            plane = bytes(map(plane.__getitem__, pick))
+        gw, q = mcux * h, qtables[slot]
+        blocks = [
+            _quantize_block(_extract_block(plane, pw, ph, bx, by), q)
+            for by in range(mcuy * v)
+            for bx in range(gw)
+        ]
+        for i, blk in enumerate(blocks):  # raster order within each MCU
+            by, bx = divmod(i, gw)
+            mcus[by // v * mcux + bx // h].append((ci, slot, blk))
+        # AC scans walk the component's NON-INTERLEAVED grid (A.2.2):
+        # ceil over the component size, not the MCU-padded grid
+        nbw = (-(-(width * h) // luma_h) + 7) // 8
+        nbh = (-(-(height * v) // luma_v) + 7) // 8
+        blocks = [
+            blocks[by * gw + bx] for by in range(nbh) for bx in range(nbw)
+        ]
+        comps.append((ci + 1, h, v, slot, blocks))
+
+    slots = range(min(len(planes), 2))
+    parts = [
+        SOI,
+        _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
+        *(_seg(0xDB, bytes([s, *qtables[s]])) for s in slots),
+        _seg(
+            0xC2 if progressive else 0xC0,
+            struct.pack(">BHHB", 8, height, width, len(comps))
+            # component id, sampling factors, quant slot
+            + bytes(b for cid, h, v, slot, _ in comps
+                    for b in (cid, (h << 4) | v, slot)),
+        ),
+    ]
+    for s in slots:
+        dc_bits, dc_vals, ac_bits, ac_vals = _ANNEX_K[s]
+        parts.append(_table_seg(0, s, dc_bits, dc_vals))
+        if not progressive:
+            parts.append(_table_seg(1, s, ac_bits, ac_vals))
+    if restart_interval:
+        parts.append(_seg(0xDD, struct.pack(">H", restart_interval)))
+
+    # SOS component list of the interleaved scans: id, (DC table << 4) |
+    # AC table; progressive DC scans code no AC
+    interleaved = bytes([len(comps)]) + bytes(
+        b for cid, _h, _v, slot, _ in comps
+        for b in (cid, (slot << 4) | (0 if progressive else slot))
+    )
+    for ss, se, ah, al in scan_script or ((0, 63, 0, 0),):
+        if ss == 0:  # baseline, DC first or DC refinement
+            scans = [(b"", interleaved, _mcu_scan(
+                mcus, len(comps), se, ah, al, restart_interval
+            ))]
+        else:  # AC: one scan per component, symbols collected first
+            enc = _enc_ac_first if ah == 0 else _enc_ac_refine
+            scans = []
+            for cid, _h, _v, _slot, blocks in comps:
+                syms: set[int] = set()
+                enc(
+                    blocks, ss, se, al, restart_interval,
+                    syms.add, lambda _v, _n: None, lambda: None,
+                )
+                bits, vals = _uniform_table(syms)
+                codes = _canonical_codes(bits, vals)
+                w = _BitWriter()
+                enc(
+                    blocks, ss, se, al, restart_interval,
+                    lambda sym: w.write(*codes[sym]), w.write, w.restart,
+                )
+                w.flush()
+                scans.append(
+                    (_table_seg(1, 0, bits, vals), bytes([1, cid, 0x00]),
+                     bytes(w.out))
+                )
+        for dht, comp_list, data in scans:
+            parts += [
+                dht,
+                _seg(0xDA, comp_list + bytes([ss, se, (ah << 4) | al])),
+                data,
+            ]
+    parts.append(EOI)
+    return b"".join(parts)
+
+
+def _check_planes(width: int, height: int, *planes: bytes) -> None:
+    if any(len(p) != width * height for p in planes):
+        raise ValueError("jpeg: planes must each be width*height bytes")
+
+
+def _check_sampling(luma_h: int, luma_v: int, full_res: str) -> None:
+    if luma_h not in (1, 2) or luma_v not in (1, 2):
+        raise ValueError("jpeg: luma sampling factors must be 1 or 2")
+    if (luma_h, luma_v) == (1, 1):
+        raise ValueError(f"jpeg: 1x1 luma is 4:4:4 — use {full_res}")
+
+
+def encode_gray(
+    width: int, height: int, pixels: bytes, qtable=FLAT_Q16,
+    restart_interval: int = 0,
+) -> bytes:
+    """Write a real baseline grayscale JPEG: FDCT, quantization under
+    ``qtable`` (zigzag-ordered in the DQT segment, as the spec requires),
+    differential DC, run-length AC, Annex K Huffman coding, byte
+    stuffing.  Edge blocks of non-multiple-of-8 images are padded by edge
+    replication (the standard convention); the decoder crops back.
+    ``restart_interval`` > 0 emits a DRI segment and an RSTn marker after
+    every that-many MCUs (one block each, for grayscale), resetting the
+    DC predictor — the camera-file layout."""
+    if len(pixels) != width * height:
+        raise ValueError("jpeg: pixels must be width*height bytes")
+    return _encode(
+        width, height, (pixels,), 1, 1, qtable, None, restart_interval
+    )
+
+
+def encode_ycbcr(
+    width: int,
+    height: int,
+    y_plane: bytes,
+    cb_plane: bytes,
+    cr_plane: bytes,
+    qtable=FLAT_Q16,
+    chroma_qtable=FLAT_Q16,
+    restart_interval: int = 0,
+) -> bytes:
+    """Write a baseline YCbCr 4:4:4 color JPEG from the three planes:
+    interleaved MCUs (one 8x8 block per component, Y then Cb then Cr),
+    per-component differential-DC predictors, Annex K LUMINANCE tables
+    (K.3/K.5) for Y and CHROMINANCE tables (K.4/K.6) for Cb/Cr, quant
+    slot 0 for Y and slot 1 for chroma.  Taking planes directly (rather
+    than RGB — :func:`encode_color` layers the fixed-point forward
+    transform on top) keeps the lossless fixture class reachable: an
+    even-valued constant block in ANY plane quantizes losslessly under
+    the flat q=16 table, exactly as in the grayscale contract.
+    ``restart_interval`` > 0 emits DRI + per-interval RSTn markers,
+    resetting ALL THREE DC predictors at each boundary."""
+    _check_planes(width, height, y_plane, cb_plane, cr_plane)
+    return _encode(
+        width, height, (y_plane, cb_plane, cr_plane), 1, 1, qtable,
+        chroma_qtable, restart_interval,
+    )
+
+
+def encode_ycbcr_sub(
+    width: int,
+    height: int,
+    y_plane: bytes,
+    cb_plane: bytes,
+    cr_plane: bytes,
+    luma_h: int = 2,
+    luma_v: int = 2,
+    qtable=FLAT_Q16,
+    chroma_qtable=FLAT_Q16,
+    restart_interval: int = 0,
+) -> bytes:
+    """Baseline YCbCr with subsampled chroma at luma sampling
+    ``luma_h x luma_v`` (each 1 or 2; chroma is always 1x1): (2,2) is
+    4:2:0 — the dominant real-world layout — (2,1) is 4:2:2, (1,2) is
+    4:4:0.  Each MCU covers ``8*luma_h x 8*luma_v`` pixels and carries
+    ``luma_h*luma_v`` Y blocks (raster order) plus one Cb and one Cr
+    block.  Chroma is subsampled by TOP-LEFT SAMPLE (spec-legal — the
+    subsampling filter is the encoder's choice) because that is the
+    exact inverse of the decoder's replication upsample: chroma constant
+    per luma_h x luma_v pixel cell (and in the fixture class per whole
+    MCU) roundtrips bit-exactly, extending the even-constant-block
+    lossless contract to every subsampled layout the decoder accepts.
+    ``restart_interval`` > 0 emits DRI + per-interval RSTn markers,
+    resetting all three DC predictors at each boundary."""
+    _check_sampling(luma_h, luma_v, "encode_ycbcr")
+    _check_planes(width, height, y_plane, cb_plane, cr_plane)
+    return _encode(
+        width, height, (y_plane, cb_plane, cr_plane), luma_h, luma_v,
+        qtable, chroma_qtable, restart_interval,
+    )
+
+
+def encode_ycbcr_420(
+    width: int,
+    height: int,
+    y_plane: bytes,
+    cb_plane: bytes,
+    cr_plane: bytes,
+    qtable=FLAT_Q16,
+    chroma_qtable=FLAT_Q16,
+    restart_interval: int = 0,
+) -> bytes:
+    """4:2:0 (luma 2x2) — see :func:`encode_ycbcr_sub`."""
+    return encode_ycbcr_sub(
+        width, height, y_plane, cb_plane, cr_plane, 2, 2, qtable,
+        chroma_qtable, restart_interval,
+    )
+
+
+def encode_color(
+    width: int, height: int, rgb: bytes, qtable=FLAT_Q16
+) -> bytes:
+    """Baseline YCbCr 4:4:4 JPEG from interleaved RGB bytes: the
+    fixed-point forward transform (:func:`rgb_to_ycbcr`) then
+    :func:`encode_ycbcr`."""
+    if len(rgb) != 3 * width * height:
+        raise ValueError("jpeg: rgb must be 3*width*height bytes")
+    n = width * height
+    yp, cbp, crp = bytearray(n), bytearray(n), bytearray(n)
+    for i in range(n):
+        yp[i], cbp[i], crp[i] = rgb_to_ycbcr(
+            rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
+        )
+    return encode_ycbcr(width, height, bytes(yp), bytes(cbp), bytes(crp),
+                        qtable, qtable)
 
 
 def encode_gray_progressive(
@@ -1058,111 +1055,10 @@ def encode_gray_progressive(
     scan (EOB runs flush at each boundary; predictors reset)."""
     if len(pixels) != width * height:
         raise ValueError("jpeg: pixels must be width*height bytes")
-    if not (0 < width <= 0xFFFF and 0 < height <= 0xFFFF):
-        raise ValueError("jpeg: dimensions out of range")
-    _check_restart_interval(restart_interval)
-    if not scan_script:
-        raise ValueError("jpeg: progressive scan script is empty")
-    if scan_script[0][:2] != (0, 0) or scan_script[0][2] != 0:
-        raise ValueError("jpeg: first progressive scan must be DC first")
-    for ss, se, ah, al in scan_script:
-        if ss == 0 and se != 0:
-            raise ValueError("jpeg: a progressive scan cannot mix DC and AC")
-        if not (0 <= ss <= se <= 63 and 0 <= al <= 13):
-            raise ValueError("jpeg: invalid scan script entry")
-        if ah != 0 and ah != al + 1:
-            raise ValueError("jpeg: successive approximation must refine "
-                             "one bit")
-
-    bw = (width + 7) // 8
-    bh = (height + 7) // 8
-    blocks = [
-        _quantize_block(_extract_block(pixels, width, height, bx, by), qtable)
-        for by in range(bh)
-        for bx in range(bw)
-    ]
-    dc_codes = _canonical_codes(DC_BITS, DC_VALS)
-
-    parts = [
-        SOI,
-        _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
-        _seg(0xDB, b"\x00" + bytes(qtable)),
-        _seg(
-            0xC2,
-            struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]),
-        ),
-        _table_seg(0, 0, DC_BITS, DC_VALS),
-    ]
-    if restart_interval:
-        parts.append(_seg(0xDD, struct.pack(">H", restart_interval)))
-
-    total = len(blocks)
-    for ss, se, ah, al in scan_script:
-        w = _BitWriter()
-        rst_idx = 0
-
-        def emit_restart():
-            nonlocal rst_idx
-            w.flush()
-            w.out += bytes([0xFF, 0xD0 + (rst_idx & 7)])
-            rst_idx += 1
-
-        if ss == 0 and ah == 0:  # DC first
-            pred = 0
-            for i, blk in enumerate(blocks):
-                v = blk[0] >> al  # arithmetic shift = decoder's OR inverse
-                size, payload = _magnitude(v - pred)
-                code, length = dc_codes[size]
-                w.write(code, length)
-                if size:
-                    w.write(payload, size)
-                pred = v
-                if (
-                    restart_interval
-                    and (i + 1) % restart_interval == 0
-                    and i + 1 < total
-                ):
-                    emit_restart()
-                    pred = 0
-            w.flush()
-            parts.append(_seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al])))
-            parts.append(bytes(w.out))
-        elif ss == 0:  # DC refinement: raw bits, no Huffman
-            for i, blk in enumerate(blocks):
-                w.write((blk[0] >> al) & 1, 1)
-                if (
-                    restart_interval
-                    and (i + 1) % restart_interval == 0
-                    and i + 1 < total
-                ):
-                    emit_restart()
-            w.flush()
-            parts.append(_seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al])))
-            parts.append(bytes(w.out))
-        else:  # AC scan: dual pass — collect symbols, ship a DHT, emit
-            enc = _enc_ac_first if ah == 0 else _enc_ac_refine
-            syms: set[int] = set()
-            enc(
-                blocks, ss, se, al, restart_interval,
-                syms.add, lambda _v, _n: None, lambda: None,
-            )
-            bits, vals = _uniform_table(syms)
-            ac_codes = _canonical_codes(bits, vals)
-            parts.append(_table_seg(1, 0, bits, vals))
-
-            def emit_sym(sym):
-                code, length = ac_codes[sym]
-                w.write(code, length)
-
-            enc(
-                blocks, ss, se, al, restart_interval,
-                emit_sym, w.write, emit_restart,
-            )
-            w.flush()
-            parts.append(_seg(0xDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al])))
-            parts.append(bytes(w.out))
-    parts.append(EOI)
-    return b"".join(parts)
+    return _encode(
+        width, height, (pixels,), 1, 1, qtable, None, restart_interval,
+        scan_script,
+    )
 
 
 def encode_ycbcr_progressive(
@@ -1182,132 +1078,11 @@ def encode_ycbcr_progressive(
     per-component as the spec requires, emitted Y, Cb, Cr per script
     band.  Quantized coefficients match :func:`encode_ycbcr` exactly, so
     decoded planes are byte-identical to the baseline stream's."""
-    n = width * height
-    if not (len(y_plane) == len(cb_plane) == len(cr_plane) == n):
-        raise ValueError("jpeg: planes must each be width*height bytes")
-    if not (0 < width <= 0xFFFF and 0 < height <= 0xFFFF):
-        raise ValueError("jpeg: dimensions out of range")
-    _check_restart_interval(restart_interval)
-    if not scan_script or scan_script[0][:3] != (0, 0, 0):
-        raise ValueError("jpeg: first progressive scan must be DC first")
-    for ss, se, ah, al in scan_script:
-        if ss == 0 and se != 0:
-            raise ValueError("jpeg: a progressive scan cannot mix DC and AC")
-        if not (0 <= ss <= se <= 63 and 0 <= al <= 13):
-            raise ValueError("jpeg: invalid scan script entry")
-        if ah != 0 and ah != al + 1:
-            raise ValueError("jpeg: successive approximation must refine "
-                             "one bit")
-
-    bw = (width + 7) // 8
-    bh = (height + 7) // 8
-    total = bw * bh
-    planes = (y_plane, cb_plane, cr_plane)
-    qts = (qtable, chroma_qtable, chroma_qtable)
-    blocks = [
-        [
-            _quantize_block(
-                _extract_block(planes[ci], width, height, bx, by), qts[ci]
-            )
-            for by in range(bh)
-            for bx in range(bw)
-        ]
-        for ci in range(3)
-    ]
-    dc_codes = (
-        _canonical_codes(DC_BITS, DC_VALS),
-        _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS),
-        _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS),
+    _check_planes(width, height, y_plane, cb_plane, cr_plane)
+    return _encode(
+        width, height, (y_plane, cb_plane, cr_plane), 1, 1, qtable,
+        chroma_qtable, restart_interval, scan_script,
     )
-
-    parts = [
-        SOI,
-        _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
-        _seg(0xDB, b"\x00" + bytes(qtable)),
-        _seg(0xDB, b"\x01" + bytes(chroma_qtable)),
-        _seg(
-            0xC2,
-            struct.pack(">BHHB", 8, height, width, 3)
-            + bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]),
-        ),
-        _table_seg(0, 0, DC_BITS, DC_VALS),
-        _table_seg(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
-    ]
-    if restart_interval:
-        parts.append(_seg(0xDD, struct.pack(">H", restart_interval)))
-
-    for ss, se, ah, al in scan_script:
-        if ss == 0:
-            w = _BitWriter()
-            rst_idx = 0
-            preds = [0, 0, 0]
-            for i in range(total):
-                for ci in range(3):
-                    blk = blocks[ci][i]
-                    if ah == 0:  # DC first
-                        v = blk[0] >> al
-                        size, payload = _magnitude(v - preds[ci])
-                        code, length = dc_codes[ci][size]
-                        w.write(code, length)
-                        if size:
-                            w.write(payload, size)
-                        preds[ci] = v
-                    else:  # DC refinement: one raw bit per block
-                        w.write((blk[0] >> al) & 1, 1)
-                if (
-                    restart_interval
-                    and (i + 1) % restart_interval == 0
-                    and i + 1 < total
-                ):
-                    w.flush()
-                    w.out += bytes([0xFF, 0xD0 + (rst_idx & 7)])
-                    rst_idx += 1
-                    preds = [0, 0, 0]
-            w.flush()
-            parts.append(
-                _seg(
-                    0xDA,
-                    bytes([3, 1, 0x00, 2, 0x10, 3, 0x10, ss, se,
-                           (ah << 4) | al]),
-                )
-            )
-            parts.append(bytes(w.out))
-        else:
-            for ci, cid in enumerate((1, 2, 3)):
-                w = _BitWriter()
-                rst_idx = 0
-
-                def emit_restart():
-                    nonlocal rst_idx
-                    w.flush()
-                    w.out += bytes([0xFF, 0xD0 + (rst_idx & 7)])
-                    rst_idx += 1
-
-                enc = _enc_ac_first if ah == 0 else _enc_ac_refine
-                syms: set[int] = set()
-                enc(
-                    blocks[ci], ss, se, al, restart_interval,
-                    syms.add, lambda _v, _n: None, lambda: None,
-                )
-                bits, vals = _uniform_table(syms)
-                ac_codes = _canonical_codes(bits, vals)
-                parts.append(_table_seg(1, 0, bits, vals))
-
-                def emit_sym(sym):
-                    code, length = ac_codes[sym]
-                    w.write(code, length)
-
-                enc(
-                    blocks[ci], ss, se, al, restart_interval,
-                    emit_sym, w.write, emit_restart,
-                )
-                w.flush()
-                parts.append(
-                    _seg(0xDA, bytes([1, cid, 0x00, ss, se, (ah << 4) | al]))
-                )
-                parts.append(bytes(w.out))
-    parts.append(EOI)
-    return b"".join(parts)
 
 
 def encode_ycbcr_progressive_sub(
@@ -1334,189 +1109,12 @@ def encode_ycbcr_progressive_sub(
     every quantized coefficient matches :func:`encode_ycbcr_sub`'s, so
     the progressive stream decodes byte-identically to the baseline
     subsampled stream."""
-    if luma_h not in (1, 2) or luma_v not in (1, 2):
-        raise ValueError("jpeg: luma sampling factors must be 1 or 2")
-    if (luma_h, luma_v) == (1, 1):
-        raise ValueError(
-            "jpeg: 1x1 luma is 4:4:4 — use encode_ycbcr_progressive"
-        )
-    n = width * height
-    if not (len(y_plane) == len(cb_plane) == len(cr_plane) == n):
-        raise ValueError("jpeg: planes must each be width*height bytes")
-    if not (0 < width <= 0xFFFF and 0 < height <= 0xFFFF):
-        raise ValueError("jpeg: dimensions out of range")
-    _check_restart_interval(restart_interval)
-    if not scan_script or scan_script[0][:3] != (0, 0, 0):
-        raise ValueError("jpeg: first progressive scan must be DC first")
-    for ss, se, ah, al in scan_script:
-        if ss == 0 and se != 0:
-            raise ValueError("jpeg: a progressive scan cannot mix DC and AC")
-        if not (0 <= ss <= se <= 63 and 0 <= al <= 13):
-            raise ValueError("jpeg: invalid scan script entry")
-        if ah != 0 and ah != al + 1:
-            raise ValueError("jpeg: successive approximation must refine "
-                             "one bit")
-
-    mcux = (width + 8 * luma_h - 1) // (8 * luma_h)
-    mcuy = (height + 8 * luma_v - 1) // (8 * luma_v)
-    cw, ch = mcux * 8, mcuy * 8
-    cb_sub = bytearray(cw * ch)
-    cr_sub = bytearray(cw * ch)
-    for cy in range(ch):
-        sy = min(luma_v * cy, height - 1)
-        for cx in range(cw):
-            sx = min(luma_h * cx, width - 1)
-            cb_sub[cy * cw + cx] = cb_plane[sy * width + sx]
-            cr_sub[cy * cw + cx] = cr_plane[sy * width + sx]
-
-    # quantized blocks per component on the INTERLEAVED grid
-    gw = (mcux * luma_h, mcux, mcux)
-    gh = (mcuy * luma_v, mcuy, mcuy)
-    blocks = [
-        [
-            _quantize_block(
-                _extract_block(y_plane, width, height, bx, by), qtable
-            )
-            for by in range(gh[0])
-            for bx in range(gw[0])
-        ],
-        [
-            _quantize_block(
-                _extract_block(bytes(cb_sub), cw, ch, bx, by), chroma_qtable
-            )
-            for by in range(gh[1])
-            for bx in range(gw[1])
-        ],
-        [
-            _quantize_block(
-                _extract_block(bytes(cr_sub), cw, ch, bx, by), chroma_qtable
-            )
-            for by in range(gh[2])
-            for bx in range(gw[2])
-        ],
-    ]
-    # non-interleaved (A.2.2) dims per component; hmax = luma_h, vmax = luma_v
-    samp = ((luma_h, luma_v), (1, 1), (1, 1))
-    nbw = [
-        (-(-(width * h) // luma_h) + 7) // 8 for (h, _v) in samp
-    ]
-    nbh = [
-        (-(-(height * v) // luma_v) + 7) // 8 for (_h, v) in samp
-    ]
-    dc_codes = (
-        _canonical_codes(DC_BITS, DC_VALS),
-        _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS),
-        _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS),
+    _check_sampling(luma_h, luma_v, "encode_ycbcr_progressive")
+    _check_planes(width, height, y_plane, cb_plane, cr_plane)
+    return _encode(
+        width, height, (y_plane, cb_plane, cr_plane), luma_h, luma_v,
+        qtable, chroma_qtable, restart_interval, scan_script,
     )
-    sampling = (luma_h << 4) | luma_v
-
-    parts = [
-        SOI,
-        _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"),
-        _seg(0xDB, b"\x00" + bytes(qtable)),
-        _seg(0xDB, b"\x01" + bytes(chroma_qtable)),
-        _seg(
-            0xC2,
-            struct.pack(">BHHB", 8, height, width, 3)
-            + bytes([1, sampling, 0, 2, 0x11, 1, 3, 0x11, 1]),
-        ),
-        _table_seg(0, 0, DC_BITS, DC_VALS),
-        _table_seg(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS),
-    ]
-    if restart_interval:
-        parts.append(_seg(0xDD, struct.pack(">H", restart_interval)))
-
-    total_mcus = mcux * mcuy
-    for ss, se, ah, al in scan_script:
-        if ss == 0:
-            w = _BitWriter()
-            rst_idx = 0
-            preds = [0, 0, 0]
-            mcu_idx = 0
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    for ci in range(3):
-                        h, v = samp[ci]
-                        for by in range(v):
-                            for bx in range(h):
-                                bi = (
-                                    (my * v + by) * gw[ci] + mx * h + bx
-                                )
-                                blk = blocks[ci][bi]
-                                if ah == 0:
-                                    val = blk[0] >> al
-                                    size, payload = _magnitude(
-                                        val - preds[ci]
-                                    )
-                                    code, length = dc_codes[ci][size]
-                                    w.write(code, length)
-                                    if size:
-                                        w.write(payload, size)
-                                    preds[ci] = val
-                                else:
-                                    w.write((blk[0] >> al) & 1, 1)
-                    mcu_idx += 1
-                    if (
-                        restart_interval
-                        and mcu_idx % restart_interval == 0
-                        and mcu_idx < total_mcus
-                    ):
-                        w.flush()
-                        w.out += bytes([0xFF, 0xD0 + (rst_idx & 7)])
-                        rst_idx += 1
-                        preds = [0, 0, 0]
-            w.flush()
-            parts.append(
-                _seg(
-                    0xDA,
-                    bytes([3, 1, 0x00, 2, 0x10, 3, 0x10, ss, se,
-                           (ah << 4) | al]),
-                )
-            )
-            parts.append(bytes(w.out))
-        else:
-            for ci, cid in enumerate((1, 2, 3)):
-                # AC scans walk the component's NON-INTERLEAVED grid:
-                # row-major over nbw x nbh, indices into the padded grid
-                scan_blocks = [
-                    blocks[ci][by * gw[ci] + bx]
-                    for by in range(nbh[ci])
-                    for bx in range(nbw[ci])
-                ]
-                w = _BitWriter()
-                rst_idx = 0
-
-                def emit_restart():
-                    nonlocal rst_idx
-                    w.flush()
-                    w.out += bytes([0xFF, 0xD0 + (rst_idx & 7)])
-                    rst_idx += 1
-
-                enc = _enc_ac_first if ah == 0 else _enc_ac_refine
-                syms: set[int] = set()
-                enc(
-                    scan_blocks, ss, se, al, restart_interval,
-                    syms.add, lambda _v, _n: None, lambda: None,
-                )
-                bits, vals = _uniform_table(syms)
-                ac_codes = _canonical_codes(bits, vals)
-                parts.append(_table_seg(1, 0, bits, vals))
-
-                def emit_sym(sym):
-                    code, length = ac_codes[sym]
-                    w.write(code, length)
-
-                enc(
-                    scan_blocks, ss, se, al, restart_interval,
-                    emit_sym, w.write, emit_restart,
-                )
-                w.flush()
-                parts.append(
-                    _seg(0xDA, bytes([1, cid, 0x00, ss, se, (ah << 4) | al]))
-                )
-                parts.append(bytes(w.out))
-    parts.append(EOI)
-    return b"".join(parts)
 
 
 def _decode_block(reader: _BitReader, dcm, acm, q, pred: int):

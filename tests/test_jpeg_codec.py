@@ -9,6 +9,7 @@ every refusal branch by name."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 import random
 
@@ -808,3 +809,102 @@ def test_restart_422_and_440_roundtrip():
                 )
             )
             assert dec["y"] == yp and dec["cb"] == cb and dec["cr"] == cr
+
+
+# ---------------------------------------------------------------------------
+# encoder stream bytes
+# ---------------------------------------------------------------------------
+
+#: odd and even geometries, including a single pixel and sizes whose
+#: subsampled MCU grid pads past the A.2.2 non-interleaved grid
+_FROZEN_GEOMETRIES = (
+    (1, 1), (8, 8), (13, 9), (16, 16), (7, 15), (17, 33), (40, 17)
+)
+_FROZEN_RESTARTS = (0, 1, 3, 100)
+_FROZEN_SAMPLING = ((1, 2), (2, 1), (2, 2))
+_FROZEN_SCRIPTS = (jpeg.PROGRESSIVE_SCRIPT,) + multimodal._PROG_SCRIPTS[1:]
+#: non-flat luma and chroma tables, so a swapped DQT slot changes bytes
+_FROZEN_LUMA_Q = tuple(3 + (i * 7) % 29 for i in range(64))
+_FROZEN_CHROMA_Q = tuple(5 + (i * 11) % 37 for i in range(64))
+
+#: sha256 per public encoder over the matrix below.  Produced by the
+#: pre-refactor hand-specialized encoders (one body per layout) and kept
+#: unchanged since: any edit to the encoder must reproduce these bytes.
+_FROZEN_DIGESTS = {
+    "encode_color":
+        "c7a531bcce71d5ed621c4fed0e727fcefabc5a68363561cf98668bb680aad6f5",
+    "encode_gray":
+        "929e59564264972a1d4af8b41160b5e5ccec9a99752944416f339f6a4de833d4",
+    "encode_ycbcr":
+        "f99b08744fcd5a73e8e94569181669dacead05509102e74f981305af08256628",
+    "encode_ycbcr_420":
+        "8600b843b1d395dd58099b29e8b513c7a34215437470b5a6c191f539a6e729ee",
+    "encode_ycbcr_sub":
+        "e8b34b871bc0ca7de8862a663a422353c19b985128a514a8e78aa56492ed13a1",
+    "encode_gray_progressive":
+        "40c38193fd3f4cfa98c0591dd43c239fd75d3c4ce774286606465d1437ad02ed",
+    "encode_ycbcr_progressive":
+        "f1d3ca335666e69ed6cdfdc63368485a699c5cfc5f1c7b0ad3636a3a704f5e63",
+    "encode_ycbcr_progressive_sub":
+        "e37489ba96f3986132ae0f32aba7268d8d7669eaa38e278a921eb92652a2664d",
+}
+
+
+def _frozen_cases():
+    """(encoder name, args, kwargs) over the deterministic matrix: per
+    geometry one image kind (random / gradient / even-constant blocks) and one
+    table pair (flat q=16 defaults, or the non-flat pair), crossed with
+    restart intervals, luma sampling and progressive scan scripts."""
+    rng = random.Random(20240615)
+    for gi, (w, h) in enumerate(_FROZEN_GEOMETRIES):
+        n = w * h
+        kind = gi % 3
+        planes = []
+        for p in range(3):
+            if kind == 0:
+                planes.append(bytes(rng.randrange(256) for _ in range(n)))
+            elif kind == 1:
+                planes.append(bytes(
+                    (x * 9 + y * 5 + p * 40) % 256
+                    for y in range(h) for x in range(w)
+                ))
+            else:
+                planes.append(bytes(
+                    64 + 2 * ((x // 8 * 3 + y // 8 * 5 + p * 7) % 64)
+                    for y in range(h) for x in range(w)
+                ))
+        gray, rgb = planes[0], bytes(v for t in zip(*planes) for v in t)
+        q = {} if gi % 2 == 0 else {
+            "qtable": _FROZEN_LUMA_Q, "chroma_qtable": _FROZEN_CHROMA_Q
+        }
+        gq = {k: v for k, v in q.items() if k == "qtable"}
+        yield "encode_color", (w, h, rgb), gq
+        for ri in _FROZEN_RESTARTS:
+            r = {"restart_interval": ri}
+            yield "encode_gray", (w, h, gray), {**gq, **r}
+            yield "encode_ycbcr", (w, h, *planes), {**q, **r}
+            yield "encode_ycbcr_420", (w, h, *planes), {**q, **r}
+            for lh, lv in _FROZEN_SAMPLING:
+                yield "encode_ycbcr_sub", (w, h, *planes, lh, lv), {**q, **r}
+            for sc in _FROZEN_SCRIPTS:
+                r = {"restart_interval": ri, "scan_script": sc}
+                yield "encode_gray_progressive", (w, h, gray), {**gq, **r}
+                yield "encode_ycbcr_progressive", (w, h, *planes), {**q, **r}
+                for lh, lv in _FROZEN_SAMPLING:
+                    yield (
+                        "encode_ycbcr_progressive_sub",
+                        (w, h, *planes, lh, lv),
+                        {**q, **r},
+                    )
+
+
+def test_encoder_bytes_are_frozen():
+    """The encoders' exact output bytes, not just their decoded pixels:
+    every public encoder hashes its streams over a fixed matrix and must
+    match the recorded digests byte for byte."""
+    digests = {}
+    for name, args, kwargs in _frozen_cases():
+        payload = getattr(jpeg, name)(*args, **kwargs)
+        d = digests.setdefault(name, hashlib.sha256())
+        d.update(len(payload).to_bytes(4, "big") + payload)
+    assert {k: d.hexdigest() for k, d in digests.items()} == _FROZEN_DIGESTS

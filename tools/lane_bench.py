@@ -7,7 +7,6 @@ min of N runs, warm session) but in isolation, and optionally dumps
 
 Usage:
     python tools/lane_bench.py [--sf DIR] [--runs N] [--explain-dir DIR] lane [lane ...]
-    python tools/lane_bench.py --all-matching PREFIX
 """
 
 from __future__ import annotations
